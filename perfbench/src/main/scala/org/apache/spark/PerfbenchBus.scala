@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** The listener bus is private to Spark; the traced run must wait for it
+  * to deliver every event before it reads the listener's counts. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
