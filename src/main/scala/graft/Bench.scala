@@ -219,24 +219,21 @@ object Bench {
     val warmupQuiesce = if (warmupDir.isDefined) quiesce(300, 120000) else 0.0
     var quiesceSec = warmupQuiesce
     // family-boundary drains (r12, VERDICT r11 #2): when the
-    // alphabetical pass LEAVES a family that registered a drain, its
-    // session-long cached state is released before the next family's
-    // clock starts — r11's RecentEdgeSlot (~500 MB, persisted at the
+    // alphabetical pass LEAVES a family, the registry artifacts it owns
+    // (keys named `<family>.`) are released before the next family's
+    // clock starts — r11's recent-edge list (~500 MB, persisted at the
     // graph block with no release path) stayed resident for the rest
     // of the run and every >2× regression in the driver artifact sat
-    // alphabetically downstream of it. The drain is untimed (between
-    // entries, before the quiesce).
+    // alphabetically downstream of it. ALL held operator results drain
+    // at every boundary too (r13, VERDICT r12 #4): every op invocation
+    // recomputes and re-holds, so that costs zero recompute and keeps
+    // steady-state persistent_rdds near the build-once artifact count.
+    // The drain is untimed (between entries, before the quiesce).
     var prevFamily: String = null
     val results = try entries.map { case (name, fn) =>
       if (prevFamily != null && SparkEntry.entryFamily(name) != prevFamily) {
-        SparkEntry.familyDrains.get(prevFamily).foreach(_())
-        // r13 (VERDICT r12 #4): ALL Pinned.hold result slots drain at
-        // every boundary, not just registered families' — hold slots
-        // bound residency (every op invocation recomputes and re-holds;
-        // they never serve cross-invocation reads), so this costs zero
-        // recompute and keeps steady-state persistent_rdds near the
-        // slot-cache count instead of one-per-op-family
-        graft.ops.Pinned.drain("")
+        graft.util.Artifacts.drain(prevFamily + ".")
+        graft.util.Artifacts.drain(graft.ops.Pinned.HoldPrefix)
       }
       prevFamily = SparkEntry.entryFamily(name)
       quiesceSec += quiesce(150, 5000)
@@ -265,16 +262,14 @@ object Bench {
         } else -1.0
       (name, warm, cold, jitWarm, jitCold, rerun)
     } finally {
-      // the last family's drain (the loop only drains on boundary
-      // crossings) — keeps the post-run session clean for the ETL
-      // throughput measurement below. Guarded: a drain failing on a
-      // wrecked session must not mask the loop's own exception or
-      // skip closing the telemetry stream (review r12).
-      try {
-        if (prevFamily != null)
-          SparkEntry.familyDrains.get(prevFamily).foreach(_())
-        graft.ops.Pinned.drain("")
-      } catch { case e: Throwable =>
+      // the end of the pass drains the whole registry (the loop only
+      // drains on boundary crossings, and a later consumer may have
+      // rebuilt an earlier family's artifact) — keeps the post-run
+      // session clean for the ETL throughput measurement below.
+      // Guarded: a drain failing on a wrecked session must not mask the
+      // loop's own exception or skip closing the telemetry stream.
+      try graft.util.Artifacts.drain("")
+      catch { case e: Throwable =>
         System.err.println(s"[bench] family drain failed (ignored): ${e.getMessage}")
       }
       telemetryOut.foreach(_.close())

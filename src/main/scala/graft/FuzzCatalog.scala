@@ -55,7 +55,7 @@ object FuzzCatalog {
     * so a persisting driver red names ≤5 trees. The other eight windows
     * stay 25-wide. The r14 adjudication evidence for these 50 trees is in
     * COVERAGE.md §2.7: every pre-registered construct/value model was
-    * refuted locally (FuzzUlpMain, FuzzValueCensusMain), and the one op
+    * refuted locally (whole-tree ulp and value-class audits), and the one op
     * with any cross-engine value license — pow — is now rendered
     * libm-free on both sides (JxSql.Dialect.pow), so a pow-class driver
     * divergence cannot recur by construction. */

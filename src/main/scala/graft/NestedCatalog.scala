@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.etl.{Child, DocAssembler, Lookup, SnowflakePlan}
 import graft.jx.{JxQuery, QueryRunner}
 import graft.ops.{Batching, NestedOps}
+import graft.util.Artifacts
+import graft.util.Artifacts.Key
 
 /**
  * Nested-document query surface: snowflake-assembled docs (customer ⊃
@@ -38,68 +40,21 @@ object NestedCatalog {
     children = Seq(Child("l_orderkey", "lineitems",
       SnowflakePlan("lineitem", "l_orderkey"))))
 
-  /** Assembled docs memoized per (doc, dir, referenced columns) within a
-    * session: catalog entries sharing a perspective reuse one persisted
-    * assembly instead of re-shuffling the snowflake per query. Bounded in
-    * BOTH dimensions (a cached DataFrame strongly references its session,
-    * so weak keys would never collect — explicit LRU eviction unpersists
-    * instead): at most 4 sessions, and at most 16 assemblies per session,
-    * so ad-hoc query shapes within one long-lived session cannot grow
-    * executor memory/disk without bound. */
-  private val MaxCachedSessions = 4
-  private val MaxAssembliesPerSession = 16
+  /** Assembled docs memoized per (session, dir, doc, referenced columns):
+    * catalog entries sharing a perspective reuse one persisted assembly
+    * instead of re-shuffling the snowflake per query. At most
+    * [[MaxAssemblies]] live at once (the least recently used is evicted
+    * and unpersisted), so ad-hoc query shapes in a long-lived session
+    * cannot grow executor memory/disk without bound. Owned by q_nested,
+    * the bulk consumers: Bench drains them when that family ends,
+    * q_window_median (the one later consumer) rebuilds its assembly
+    * cold, and the end of the pass drains that copy. */
+  private[graft] val AssemblyKey = "q_nested.assembly"
+  private val MaxAssemblies = 16
 
-  private type AssemblyKey = (String, String, Option[Set[String]], Set[String])
-
-  private def unpersistQuietly(df: DataFrame): Unit =
-    try df.unpersist(blocking = false)
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Access-ordered LRU of assemblies; evicted entries are unpersisted. */
-  private final class AssemblyCache
-      extends java.util.LinkedHashMap[AssemblyKey, DataFrame](32, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[AssemblyKey, DataFrame]): Boolean = {
-      val evict = size() > MaxAssembliesPerSession
-      if (evict) unpersistQuietly(e.getValue)
-      evict
-    }
-  }
-
-  private val assembled =
-    new java.util.LinkedHashMap[SparkSession, AssemblyCache](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, AssemblyCache]): Boolean = {
-        val evict = size() > MaxCachedSessions
-        if (evict) e.getValue.values.forEach(df => unpersistQuietly(df))
-        evict
-      }
-    }
-
-  /** Unpersist and drop every cached assembly of `s`. Used by SPECS to
-    * isolate cache state between cases; Bench deliberately does NOT call
-    * it — warm-run timings are supposed to include assembly-cache hits,
-    * exactly as a long-lived session would see them. */
-  def clearCache(s: SparkSession): Unit = assembled.synchronized {
-    val m = assembled.remove(s)
-    if (m != null) m.values.forEach(df => unpersistQuietly(df))
-  }
-
-  /** Drop every cached assembly of EVERY session (r13 family drains):
-    * registered for the q_window family — the alphabetically last
-    * bench consumer of assembled documents — so the ~150 MB of
-    * persisted doc variants (one per distinct pruned-column set) stops
-    * being end-of-run residency. Warm timings inside the consuming
-    * families still see cache hits; only the post-consumer tail pays
-    * nothing for the release (assemblies rebuild on demand). */
-  def clearAllCaches(): Unit = assembled.synchronized {
-    assembled.values.forEach(m => m.values.forEach(df => unpersistQuietly(df)))
-    assembled.clear()
-  }
-
-  /** Number of live cached assemblies for `s` (spec hook). */
-  private[graft] def cachedAssemblies(s: SparkSession): Int = assembled.synchronized {
-    val m = assembled.get(s); if (m == null) 0 else m.size()
-  }
+  /** Number of live cached assemblies for `s` (spec and benchmark hook). */
+  private[graft] def cachedAssemblies(s: SparkSession): Int =
+    Artifacts.keys(AssemblyKey).count(_.parts.head == s)
 
   /** Table loader that also serves assembled document "tables", pruned to
     * the query's referenced columns (see JxQuery.referenced).
@@ -108,21 +63,10 @@ object NestedCatalog {
                           whole: Set[String] = Set.empty): String => DataFrame = {
     val base = SparkEntry.loader(s, dir)
     def doc(name: String, plan: => SnowflakePlan): DataFrame =
-      // assemble+persist are lazy (driver-side plan building, no jobs), so
-      // the whole lookup-or-insert holds the lock: an eviction can never
-      // interleave and strand a freshly persisted plan in an orphaned map
-      assembled.synchronized {
-        var m = assembled.get(s)
-        if (m == null) { m = new AssemblyCache; assembled.put(s, m) }
-        val key = (name, dir, needed, whole)
-        var df = m.get(key)
-        if (df == null) {
-          df = DocAssembler.assemble(plan, base, needed, whole)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          m.put(key, df)
-        }
-        df
-      }
+      Artifacts.getOrBuild(Key(AssemblyKey, s, dir, name, needed, whole), MaxAssemblies)(
+        DocAssembler.assemble(plan, base, needed, whole)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
+        _.unpersist(blocking = false))
     name => name match {
       case "customer_docs" => doc("customer_docs", customerPlan)
       case "customer_orders" => doc("customer_orders", customerOrdersPlan)
@@ -145,12 +89,6 @@ object NestedCatalog {
     * output. Within a JVM the previous call's output is always fully
     * materialized before the next call starts (entries run
     * sequentially), so the wipe is safe. Returns a fresh run dir. */
-  /** One live resume-extract scratch per (session, sf dir) — see the
-    * q_etl_extract_resume entry comment for the replay semantics. */
-  private val ResumeScratchSlot =
-    new java.util.concurrent.atomic.AtomicReference[
-      (SparkSession, String, java.nio.file.Path)]()
-
   private def freshScratch(name: String): java.nio.file.Path = {
     val scratch = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"${name}_${ProcessHandle.current().pid()}")
@@ -455,8 +393,8 @@ object NestedCatalog {
     // states — the reference's counter-replay contract
     // (tests/test_counters.py, tests/test_extract.py:46-148), driver-checked.
     //
-    // Repeat invocations in one JVM REUSE the scratch dir (one-slot,
-    // keyed by (session, dir)): both Extract.run calls then resume past
+    // Repeat invocations in one JVM REUSE the scratch dir (one registry
+    // entry per (session, dir)): both Extract.run calls then resume past
     // a watermark that already covers their window, extract 0 rows, and
     // leave the destination untouched — the counter-replay contract's
     // idempotent-replay case, exercised for free. The first invocation
@@ -465,15 +403,8 @@ object NestedCatalog {
     // entry's warm timed surface to resume + read-back instead of
     // re-paying two gzip-JSON increment writes per timing.
     "q_etl_extract_resume" -> (q((s, dir) => {
-      val tmp = ResumeScratchSlot.synchronized {
-        Option(ResumeScratchSlot.get()) match {
-          case Some((`s`, `dir`, cached)) => cached
-          case _ =>
-            val fresh = freshScratch("graft_q_etl_resume")
-            ResumeScratchSlot.set((s, dir, fresh))
-            fresh
-        }
-      }
+      val tmp = Artifacts.getOrBuild(Key("q_etl.resume_scratch", s, dir))(
+        freshScratch("graft_q_etl_resume"))(_ => ())
       val base = SparkEntry.loader(s, dir)
       def bounded(until: String): String => DataFrame = n =>
         if (n == "orders") base(n).where(col("o_orderdate") < lit(until)) else base(n)

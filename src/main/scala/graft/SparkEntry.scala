@@ -36,11 +36,13 @@ object SparkEntry {
     if (table != null) { schemaCache.remove((dir, table)); () }
     else schemaCache.keySet.removeIf(_._1 == dir)
 
-  def loader(spark: SparkSession, dir: String): String => DataFrame = name => {
-    val sch = schemaCache.computeIfAbsent((dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet").schema)
-    normalizeTs(spark.read.schema(sch).parquet(s"$dir/$name.parquet"))
-  }
+  /** The cached schema of `dir/table.parquet`, shared by the batch
+    * loader and the stream reads. */
+  def schemaOf(spark: SparkSession, dir: String, table: String): org.apache.spark.sql.types.StructType =
+    schemaCache.computeIfAbsent((dir, table), _ => spark.read.parquet(s"$dir/$table.parquet").schema)
+
+  def loader(spark: SparkSession, dir: String): String => DataFrame = name =>
+    normalizeTs(spark.read.schema(schemaOf(spark, dir, name)).parquet(s"$dir/$name.parquet"))
 
   /** Parquet TIMESTAMP(NANOS) is read as Long (spark.sql.legacy.parquet.
     * nanosAsLong=true — Spark has no native nanos type); convert to a
@@ -100,37 +102,10 @@ object SparkEntry {
 
   /** THE family-key convention: entry-name prefix up to the second
     * '_'. Load-bearing in two places — the bench's warmup grouping and
-    * the [[familyDrains]] boundary detection — so it lives here once
-    * (review r12: two inline copies plus prose is how a prefix-depth
-    * change silently stops drains from firing). */
+    * its family-boundary drains of the [[graft.util.Artifacts]] keys the
+    * family owns — so it lives here once (two inline copies plus prose
+    * is how a prefix-depth change silently stops drains from firing). */
   def entryFamily(name: String): String = name.split("_").take(2).mkString("_")
-
-  /** Per-family lifecycle drains (r12, VERDICT r11 #2; r13 extends
-    * them catalog-wide per VERDICT r12 #4): when a caller that runs
-    * entries in alphabetical order (the bench) finishes a family
-    * (keyed by [[entryFamily]]), the family's session-long cached
-    * state is released. A slot registers under its alphabetically
-    * LAST consuming family (cross-family slots — the incremental LSH
-    * index, the nested assembly cache — drain when their final
-    * consumer is done); slots refill on demand if touched again, so
-    * draining is always safe, just possibly wasteful. The bench
-    * additionally drains ALL `Pinned.hold` result slots at EVERY
-    * family boundary (see Bench): hold slots bound residency, they
-    * are never memo caches, so that drain costs zero recompute. */
-  val familyDrains: Map[String, () => Unit] = Map(
-    "q_dedup" -> (() => TrainingShared.drainDedupSlots()),
-    "q_graph" -> (() => TrainingShared.drainGraphSlots()),
-    "q_multimodal" -> (() => TrainingShared.drainMultimodalSlots()),
-    "q_pipeline" -> (() => TrainingShared.drainPipelineSlots()),
-    // assembled nested docs (~150 MB at sf0.1, one persisted variant
-    // per pruned-column set): the consumer families are q_agg..q_nested
-    // plus exactly ONE later entry (q_window_median), so the cache
-    // drains when the BULK consumers finish — freeing the back third of
-    // the run that r12's >2× cluster sat in — at the cost of one
-    // assembly rebuild in q_window_median's cold run, and again at
-    // q_window (the last consumer) so nothing outlives the catalog pass
-    "q_nested" -> (() => NestedCatalog.clearAllCaches()),
-    "q_window" -> (() => NestedCatalog.clearAllCaches()))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -27,30 +27,18 @@ object StreamCatalog {
   private val seq = new java.util.concurrent.atomic.AtomicInteger()
   private def sinkName(tag: String): String = s"graft_stream_${tag}_${seq.incrementAndGet()}"
 
-  /** Batch-infer the schema once, then stream-read the same file —
-    * streaming file sources require an explicit schema, and a brace-glob
-    * path so the source's basePath resolves to the directory (a bare
-    * file path is rejected). Applies the same ns→µs `ts` normalization
-    * as the batch loader.
+  /** Stream-read a table with its batch schema — streaming file sources
+    * require an explicit schema, and a brace-glob path so the source's
+    * basePath resolves to the directory (a bare file path is rejected).
+    * Applies the same ns→µs `ts` normalization as the batch loader.
     *
-    * The inferred schema is CACHED per (dir, table) — static file
-    * metadata, not data (r14): every stream entry paid a batch
-    * parquet footer read per invocation (twice for the stream-stream
-    * joins, which build two sources over the same table), pure fixed
-    * overhead on the drain-dominated entries. A production job passes
-    * its schema explicitly for the same reason. Like the batch
-    * loader's cache it never invalidates (ADVICE r14): source tables
-    * are schema-static for the JVM's life by contract —
-    * [[SparkEntry.invalidateSchema]] documents the escape hatch for
-    * any future in-JVM schema rewrite. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.types.StructType]()
-  private def streamRead(s: SparkSession, dir: String, table: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent((dir, table),
-      _ => s.read.parquet(s"$dir/$table.parquet").schema)
+    * The schema comes from the batch loader's per-(dir, table) cache
+    * (r14: every stream entry paid a parquet footer read per
+    * invocation, twice for the stream-stream joins), so
+    * [[SparkEntry.invalidateSchema]] refreshes stream reads too. */
+  private[graft] def streamRead(s: SparkSession, dir: String, table: String): DataFrame =
     SparkEntry.normalizeTs(
-      s.readStream.schema(sch).parquet(s"$dir/{$table.parquet}"))
-  }
+      s.readStream.schema(SparkEntry.schemaOf(s, dir, table)).parquet(s"$dir/{$table.parquet}"))
 
   /** Run `df` to a memory sink, drain, stop, and hand back the table.
     * Sinks from EARLIER invocations of the same tag are dropped first —

@@ -228,11 +228,10 @@ private[graft] object TrainingDedupEntries {
     // batch entry q_dedup_minhash_lsh pins (measured 256/256 at sf0.1).
     "q_dedup_incremental_lsh" -> (q((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val existing = d.where(col("doc_id") < 300)
       val delta = d.where(col("doc_id") >= 300)
         .unionByName(d.where(col("doc_id") < 5)
           .withColumn("doc_id", col("doc_id") + 100000L))
-      val (bands, shingles) = lshIndexFor(s, dir, existing)
+      val (bands, shingles) = lshIndexFor(s, dir)
       Dedup.nearDupDeltaLsh(delta, "doc_id", "text", bands, shingles)
         .orderBy("delta_id", "match_id")
     }), Some("""
@@ -469,7 +468,7 @@ private[graft] object TrainingDedupEntries {
     // each near-dup cluster (n_chars score, ties → smallest id) —
     // real curation keeps the most complete copy, min-id only encodes
     // ingest order. One partial-aggregatable struct argmax per
-    // cluster; singletons keep themselves. Shares the slot-cached LSH
+    // cluster; singletons keep themselves. Shares the build-once LSH
     // pair discovery with q_dedup_clusters.
     "q_dedup_keep_best" -> (q((s, dir) =>
       Dedup.keepBestByScore(docs(s, dir), "doc_id",
@@ -559,14 +558,14 @@ private[graft] object TrainingDedupEntries {
     // pairs in this synthetic corpus top out near cos 0.67 (max over
     // ~2M uniform pairs), so the survivor set is EXACTLY the original
     // corpus — which is what the oracle states. Same coarse quantizer
-    // (and slot) as the IVF entries.
+    // (and registry key) as the IVF entries.
     "q_dedup_semantic" -> (q((s, dir) => {
       val e = embs(s, dir).select(col("vec_id"), col("embedding"))
       val planted = e.where(col("vec_id") < 20)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val corpus = e.unionByName(planted)
       Similarity.semanticDedup(corpus, "vec_id", "embedding",
-          ivfCentroidsFor(s, dir, corpus, nlist = 16), threshold = 0.9)
+          ivfCentroidsFor(s, dir, corpus), threshold = 0.9)
         .select(col("vec_id")).orderBy("vec_id")
     }), Some("""
       SELECT vec_id FROM embeddings ORDER BY vec_id""")),

@@ -203,7 +203,7 @@ private[graft] object TrainingGraphEntries {
     // label-propagation communities over the co-purchase graph (LPA,
     // deterministic sync variant: most-frequent neighbor label, ties →
     // smallest): ALL-INTEGER rounds — one (dst, label) count shuffle +
-    // one argmax window each — over the slot-pinned edge list. Output:
+    // one argmax window each — over the build-once edge list. Output:
     // community size distribution (top-50). Oracle replays 3 rounds as
     // chained CTEs.
     "q_graph_communities" -> (q((s, dir) => {
@@ -319,7 +319,7 @@ private[graft] object TrainingGraphEntries {
     // cap keeps 460/2000 centers and 33k/350k pairs — a real filter,
     // not a no-op. Oracle = the exact oracle with the cap in the wadj
     // CTE. Anti-join still runs against the FULL edge set.
-    // r12: the capped RESULT is slot-shared (TrainingShared.
+    // r12: the capped RESULT is built once (TrainingShared.
     // cappedRecentAa) across the three entries that derive from it —
     // one wedge join per (session, sf dir) instead of one per
     // consuming entry, and no more hold-slot eviction ping-pong
@@ -369,7 +369,7 @@ private[graft] object TrainingGraphEntries {
       // r12 bounded the fixture (capped top-5000 slice, shared capped
       // frame); r13 (VERDICT r12 #2) moves the WHOLE candidate
       // derivation — ranked slice, undirected canonicalize + degree
-      // pass, deg≤24 exact-regime guard — into a build-once slot
+      // pass, deg≤24 exact-regime guard — into a build-once artifact
       // ([[TrainingShared.sketchCandidates]]): it is pure static graph
       // structure, and rebuilding it per run re-churned checkpoint
       // blocks every invocation (the residency interaction behind the

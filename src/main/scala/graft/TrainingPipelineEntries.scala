@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.util.Artifacts.Key
 
 
 /**
@@ -268,7 +269,7 @@ private[graft] object TrainingPipelineEntries {
       val surv1 = graft.ops.Pinned.hold("pipeline.incr_surv1",
         Dedup.dedupDeltaAgainstIndex(delta, "doc_id", "text",
           Dedup.hashIndex(existing, "text")))
-      val (bands, shingles) = lshIndexFor(s, dir, existing)
+      val (bands, shingles) = lshIndexFor(s, dir)
       val dropped = Dedup.nearDupDeltaLsh(surv1.select("doc_id", "text"),
           "doc_id", "text", bands, shingles)
         .select(col("delta_id").as("doc_id")).distinct()
@@ -589,7 +590,7 @@ private[graft] object TrainingPipelineEntries {
       // the exact cosine pair generation and the final anti-join/token
       // count — and lazily each re-executed the join and re-scored the
       // full corpus. Same single-pin hoist as q_pipeline_incremental
-      // (r14); the slot drains at the family boundary.
+      // (r14); the hold drains at the family boundary.
       val gated = graft.ops.Pinned.hold("pipeline.crossmodal_gated",
         d.join(e, d("doc_id") === e("vec_id"))
           .where(col("lang") === "en" && TextAnalysis.qualityScore(col("text")) >= 0.5)
@@ -658,21 +659,10 @@ private[graft] object TrainingPipelineEntries {
       // the regex-heavy curation filter feeds BOTH the LSH discovery and
       // the survivor join — persist it ONCE (the production shape, same
       // reasoning as Extract's increment persist: a bounded working set
-      // read by several consumers). The one-slot holder reuses the copy
-      // across repeat invocations on the same (session, dir) and bounds
-      // the cache to a single live corpus.
-      val cur = CuratedSlot.synchronized {
-        Option(CuratedSlot.get()) match {
-          case Some((`s`, `dir`, cached)) => cached
-          case prev =>
-            val fresh = docs(s, dir)
-              .where(TextAnalysis.langId(t) === "en" && TextAnalysis.qualityScore(t) >= 0.5)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            prev.foreach(_._3.unpersist())
-            CuratedSlot.set((s, dir, fresh))
-            fresh
-        }
-      }
+      // read by several consumers), reused across repeat invocations on
+      // the same (session, dir).
+      val cur = persisted(Key("q_pipeline.curated", s, dir))(docs(s, dir)
+        .where(TextAnalysis.langId(t) === "en" && TextAnalysis.qualityScore(t) >= 0.5))
       val pairs = Dedup.minhashLshPairs(cur, "doc_id", "text",
         n = 3, numHashes = 128, bands = 32, threshold = 0.5)
       val dropped = Dedup.connectedComponents(pairs)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.util.Artifacts
+import graft.util.Artifacts.Key
 
 
 /**
@@ -16,333 +18,134 @@ private[graft] object TrainingShared {
 
   def q(f: Q): Q = f
 
-  /** One live persisted copy of q_pipeline_curate's filtered corpus,
-    * keyed by (session, sf dir) and REUSED on repeat invocations — the
-    * same warm-run convention as the NestedCatalog assembly cache
-    * (warm bench timings measure cached-corpus reads, cold carries the
-    * filter cost). See the entry's comment. */
-  val CuratedSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, DataFrame)]()
+  // ---- build-once artifacts ---------------------------------------------
+  // Warm bench timings measure the operator under test, not its
+  // scaffolding: a fitted index, a discovered pair list or a static graph
+  // structure is built once per (session, dir, fit parameters) in
+  // [[Artifacts]], paid by the cold run and reused warm. Each key names
+  // the entry family that is its last consumer; Bench drains that
+  // family's prefix when its alphabetical pass leaves the family (r11:
+  // an undrained ~500 MB edge list slowed every later family).
 
-  /** One fitted IVF coarse quantizer per (session, sf dir), reused on
-    * repeat invocations — an IVF index is built once and queried many
-    * times, so warm bench timings measure the SEARCH path while the
-    * cold run carries the fit (same convention as [[CuratedSlot]]). */
-  val IvfSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, Array[Array[Double]])]()
+  private val Disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  /** One fitted PQ codebook set per (session, sf dir) — same build-once
-    * convention as [[IvfSlot]]. */
-  val PqSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, Array[Array[Array[Double]]])]()
+  /** A frame persisted once per key, unpersisted on release. */
+  def persisted(key: Key)(build: => DataFrame): DataFrame =
+    Artifacts.getOrBuild(key)(build.persist(Disk))(_.unpersist(blocking = false))
 
-  // the three quantizer-fit slots synchronize like every other slot in
-  // this file: Bench's PARALLEL warmup runs entry families on separate
-  // threads, and an unsynchronized check-then-act here ran duplicate
-  // k-means fits with a nondeterministic last-writer winner (review r9)
+  /** A frame checkpointed once per key ([[graft.ops.Pinned.checkpoint]]:
+    * a copy no operator's held result can invalidate), its pin released
+    * on release. */
+  private def checkpointed(key: Key)(build: => DataFrame): DataFrame =
+    Artifacts.getOrBuild(key)(graft.ops.Pinned.checkpoint(build))(
+      p => graft.ops.Pinned.release(p._2))._1
+
+  /** A driver-side fit computed once per key; nothing to release. */
+  private def fitted[T](key: Key)(fit: => T): T = Artifacts.getOrBuild(key)(fit)(_ => ())
+
+  /** IVF coarse cells fitted by every IVF entry. */
+  private val IvfNlist = 16
+  private val PqM = 8
+  private val PqK = 16
+
+  /** The IVF coarse quantizer, fitted once per (session, dir, nlist) and
+    * shared by the q_sim IVF entries and q_dedup_semantic. The key omits
+    * the corpus on purpose: the entries fit it on the embeddings with or
+    * without their planted copies, and whichever runs first serves all
+    * (see q_dedup_semantic). */
+  def ivfCentroidsFor(s: SparkSession, dir: String, corpus: DataFrame): Array[Array[Double]] =
+    fitted(Key("q_sim.ivf_centroids", s, dir, IvfNlist))(
+      Similarity.ivfFitCentroids(corpus, IvfNlist))
+
   def pqCodebooksFor(s: SparkSession, dir: String,
+                     corpus: DataFrame): Array[Array[Array[Double]]] =
+    fitted(Key("q_sim.pq_codebooks", s, dir, PqM, PqK))(
+      Similarity.pqFitCodebooks(corpus, m = PqM, k = PqK))
+
+  /** Residual PQ codebooks over the [[ivfCentroidsFor]] cells. */
+  def pqResidualCodebooksFor(s: SparkSession, dir: String,
                              corpus: DataFrame): Array[Array[Array[Double]]] =
-    PqSlot.synchronized { PqSlot.get() match {
-      case (ss, d, c) if (ss eq s) && d == dir => c
-      case _ =>
-        val c = Similarity.pqFitCodebooks(corpus, m = 8, k = 16)
-        PqSlot.set((s, dir, c)); c
-    }
-    }
+    fitted(Key("q_sim.pq_residual_codebooks", s, dir, IvfNlist, PqM, PqK))(
+      Similarity.pqFitResidualCodebooks(corpus, ivfCentroidsFor(s, dir, corpus), m = PqM, k = PqK))
 
-  /** One persisted co-purchase edge list per (session, sf dir) — the
-    * graph STRUCTURE is static while ranks are recomputed per run
-    * (build-once/query-many, the [[IvfSlot]] convention): cold carries
-    * the bounded self-join + distinct, warm measures rank iteration. */
-  val EdgeSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, DataFrame)]()
-
+  /** The co-purchase graph: its structure is static while ranks are
+    * recomputed per run. */
   def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    EdgeSlot.synchronized {
-      Option(EdgeSlot.get()) match {
-        case Some((`s`, `dir`, df)) => df
-        case prev =>
-          val li = SparkEntry.loader(s, dir)("lineitem")
-          val fresh = graft.ops.Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          prev.foreach(_._3.unpersist())
-          EdgeSlot.set((s, dir, fresh))
-          fresh
-      }
-    }
-
-  val RecentEdgeSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, DataFrame)]()
+    persisted(Key("q_graph.edges", s, dir))(graft.ops.Graph.coOccurrenceEdges(
+      SparkEntry.loader(s, dir)("lineitem"), "l_orderkey", "l_partkey"))
 
   /** Recent-slice co-purchase graph (ships ≥ 1999) for the DENSITY
     * analytics (triangles, Adamic–Adar): the full 6-year graph's avg
     * degree ~120 puts Σdeg² near 300M — a density census runs on a
     * cohort slice, and the shipdate predicate pushes down to the scan.
-    * Slot-cached like [[coPurchaseEdges]] (r11): "rebuild per
-    * invocation" was cheap when every graph entry consumed the edges
-    * once, but the four-tier Adamic–Adar entries each drive MULTIPLE
-    * consumers (degree guard + candidate generator + scorer), and the
-    * measured self-join rebuild cost ~2-4 s per consumer at sf0.1 —
-    * the graph STRUCTURE is static, build-once/query-many applies. */
+    * Built once (r11): the four-tier Adamic–Adar entries each drive
+    * several consumers, and the self-join cost ~2-4 s per consumer at
+    * sf0.1. */
   def recentCoPurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    RecentEdgeSlot.synchronized {
-      Option(RecentEdgeSlot.get()) match {
-        case Some((`s`, `dir`, df)) => df
-        case prev =>
-          val li = SparkEntry.loader(s, dir)("lineitem")
-            .where(col("l_shipdate") >= lit("1999-01-01").cast("date"))
-          val fresh = graft.ops.Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          prev.foreach(_._3.unpersist())
-          RecentEdgeSlot.set((s, dir, fresh))
-          fresh
-      }
-    }
+    persisted(Key("q_graph.recent_edges", s, dir))(graft.ops.Graph.coOccurrenceEdges(
+      SparkEntry.loader(s, dir)("lineitem").where(col("l_shipdate") >= lit("1999-01-01").cast("date")),
+      "l_orderkey", "l_partkey"))
 
-  /** One CHECKPOINTED capped Adamic–Adar result (recent slice, cap 15)
-    * per (session, sf dir) — shared by the three entries that derive
-    * from the capped tier (its own oracle row, the rescore candidates,
-    * the sketch candidate slice). r11 ran `Graph.adamicAdarCapped`
-    * once per consuming entry; each invocation re-executed the wedge
-    * join AND evicted the op's one-slot `Pinned.hold`, which is the
-    * mechanism behind the r11 driver artifact's PERSISTENT
-    * q_graph_adamic_adar_rescore inversion (warm 8.8 s vs cold 3.2 s:
-    * the preceding capped entry had just populated the hold slot, and
-    * every rescore run evicted + re-materialized it — VERDICT r11 #3).
-    * The cached frame is a [[graft.ops.Pinned.checkpoint]] COPY taken
-    * out of the hold slot, so a later `adamicAdarCapped` call (specs,
-    * ad-hoc use) evicting the op slot cannot invalidate it. Released
-    * by [[drainGraphSlots]]. */
-  val CappedAaSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, DataFrame, org.apache.spark.rdd.RDD[_])]()
-
+  /** The capped Adamic–Adar result (recent slice, cap 15), shared by the
+    * three entries that derive from the capped tier. One run per entry
+    * re-executed the wedge join and evicted the op's held result, which
+    * made q_graph_adamic_adar_rescore's warm run slower than its cold
+    * one (VERDICT r11 #3). */
   def cappedRecentAa(s: SparkSession, dir: String): DataFrame =
-    CappedAaSlot.synchronized {
-      Option(CappedAaSlot.get()) match {
-        case Some((`s`, `dir`, df, _)) => df
-        case prev =>
-          val held = graft.ops.Graph.adamicAdarCapped(recentCoPurchaseEdges(s, dir), maxDeg = 15)
-          val (copy, h) = graft.ops.Pinned.checkpoint(held)
-          prev.foreach(p => graft.ops.Pinned.release(p._4))
-          CappedAaSlot.set((s, dir, copy, h))
-          copy
-      }
-    }
+    checkpointed(Key("q_graph.capped_aa", s, dir, 15))(
+      graft.ops.Graph.adamicAdarCapped(recentCoPurchaseEdges(s, dir), maxDeg = 15))
 
-  /** One CHECKPOINTED sketch-entry candidate list per (session, sf
-    * dir) — the capped top-5000 slice under the deg≤24 exact-regime
-    * guard (r13, VERDICT r12 #2: the q_graph_adamic_adar_sketch
-    * fixture rebuilt this per run — ranked slice over the capped
-    * result, a FULL undirected-canonicalize + degree pass over the
-    * recent edges, one checkpoint and two broadcast semi-joins — all
-    * of it pure static graph structure with zero per-run information.
-    * The driver artifact's 40.6 s isolated rerun sat in exactly this
-    * per-run churn: same code measured 2.4-3.6 s warm in isolation,
-    * so the blowup is residency-interaction, and the fix is to stop
-    * re-churning blocks every run). Build-once/query-many like
-    * [[CappedAaSlot]]; per-run entry cost is now the sketch SCORER
-    * alone. Released by [[drainGraphSlots]]. */
-  val SketchCandSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, Int, DataFrame, org.apache.spark.rdd.RDD[_])]()
-
+  /** The sketch entry's candidate list: the capped top-5000 slice under
+    * the deg ≤ k exact-regime guard. All of it is static graph structure,
+    * so building it per run only churned blocks (VERDICT r12 #2); the
+    * entry's per-run cost is the sketch scorer alone. */
   def sketchCandidates(s: SparkSession, dir: String, k: Int = 24): DataFrame =
-    SketchCandSlot.synchronized {
-      Option(SketchCandSlot.get()) match {
-        // k is part of the key: a hit with a different degree guard
-        // must rebuild, not silently serve the old guard's pairs
-        case Some((`s`, `dir`, `k`, df, _)) => df
-        case prev =>
-          val cand0 = cappedRecentAa(s, dir)
-            .orderBy(col("aa").desc, col("x"), col("y")).limit(5000)
-            .select(col("x"), col("y"))
-          val und = recentCoPurchaseEdges(s, dir)
-            .select(least(col("src"), col("dst")).as("a"),
-              greatest(col("src"), col("dst")).as("b"))
-            .where(col("a") =!= col("b")).distinct()
-          val deg = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
-            .groupBy("id").agg(count(lit(1)).as("deg"))
-          val sub = deg.where(col("deg") <= k).select(col("id"))
-          val (copy, h) = graft.ops.Pinned.checkpoint(cand0
-            .join(broadcast(sub.select(col("id").as("x"))), Seq("x"), "left_semi")
-            .join(broadcast(sub.select(col("id").as("y"))), Seq("y"), "left_semi")
-            .select(col("x"), col("y")))
-          prev.foreach(p => graft.ops.Pinned.release(p._5))
-          SketchCandSlot.set((s, dir, k, copy, h))
-          copy
-      }
+    checkpointed(Key("q_graph.sketch_candidates", s, dir, k)) {
+      val cand0 = cappedRecentAa(s, dir)
+        .orderBy(col("aa").desc, col("x"), col("y")).limit(5000)
+        .select(col("x"), col("y"))
+      val und = recentCoPurchaseEdges(s, dir)
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .where(col("a") =!= col("b")).distinct()
+      val deg = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
+        .groupBy("id").agg(count(lit(1)).as("deg"))
+      val sub = deg.where(col("deg") <= k).select(col("id"))
+      cand0
+        .join(broadcast(sub.select(col("id").as("x"))), Seq("x"), "left_semi")
+        .join(broadcast(sub.select(col("id").as("y"))), Seq("y"), "left_semi")
+        .select(col("x"), col("y"))
     }
 
-  /** Release the graph family's session-long residency — the fix for
-    * VERDICT r11 #2: `RecentEdgeSlot` (persisted MEMORY_AND_DISK, ~500
-    * MB at sf0.1) was introduced in r11 with no release path and sat
-    * resident for the entire bench run; driver telemetry showed
-    * storage 10 → 731 MB at the graph block and every >2× regression
-    * in the round landed alphabetically DOWNSTREAM of it
-    * (q_pipeline_overlap_matrix 1.15 → 10.6 s on untouched code).
-    * The bench invokes this via [[SparkEntry.familyDrains]] when its
-    * alphabetical pass leaves the q_graph family; the slots refill on
-    * demand if touched again. Also drains the graph ops' `Pinned.hold`
-    * result slots ("graph." keys) — result-sized pins with the same
-    * no-consumer-after-the-family property. */
-  def drainGraphSlots(): Unit = {
-    EdgeSlot.synchronized {
-      Option(EdgeSlot.getAndSet(null)).foreach(_._3.unpersist(blocking = false))
-    }
-    RecentEdgeSlot.synchronized {
-      Option(RecentEdgeSlot.getAndSet(null)).foreach(_._3.unpersist(blocking = false))
-    }
-    CappedAaSlot.synchronized {
-      Option(CappedAaSlot.getAndSet(null)).foreach(p => graft.ops.Pinned.release(p._4))
-    }
-    SketchCandSlot.synchronized {
-      Option(SketchCandSlot.getAndSet(null)).foreach(p => graft.ops.Pinned.release(p._5))
-    }
-    graft.ops.Pinned.drain("graph.")
-  }
-
-  // ---- catalog-wide family drains (r13, VERDICT r12 #4) -----------------
-  // r12 proved the drain mechanism works (telemetry: storage 568 MB →
-  // 8 MB at the graph boundary) but registered only ONE family; the
-  // session still carried 27 persistent RDDs / ~150 MB across the back
-  // two-thirds of the run, and the round's diffuse >2× cluster sat in
-  // that residency's shadow. These register every remaining
-  // slot-holding family. Ownership = the alphabetically LAST consuming
-  // family (drains fire when the bench's alphabetical pass LEAVES the
-  // family); slots refill on demand, so a drain is always safe.
-
-  /** q_dedup family: the MinHash-LSH pair list (consumed only by
-    * q_dedup_clusters / q_dedup_keep_best). The (band, shingle) index
-    * is NOT drained here — q_pipeline_incremental shares it and runs
-    * later; see [[drainPipelineSlots]]. */
-  def drainDedupSlots(): Unit =
-    LshPairsSlot.synchronized {
-      Option(LshPairsSlot.getAndSet(null)).foreach(_._3.unpersist(blocking = false))
-    }
-
-  /** q_multimodal family: the synthetic-PNG payload corpus. */
-  def drainMultimodalSlots(): Unit =
-    PngSlot.synchronized {
-      Option(PngSlot.getAndSet(null)).foreach(_._3.unpersist(blocking = false))
-    }
-
-  /** q_pipeline family: the curated-corpus slot, the incremental LSH
-    * (band, shingle) index (shared with q_dedup_incremental, which
-    * runs EARLIER — this is its last consumer), and the
-    * connected-components result holder (recomputed per call; the
-    * holder only bounds residency, so releasing costs nothing). */
-  def drainPipelineSlots(): Unit = {
-    CuratedSlot.synchronized {
-      Option(CuratedSlot.getAndSet(null)).foreach(_._3.unpersist(blocking = false))
-    }
-    LshIndexSlot.synchronized {
-      Option(LshIndexSlot.getAndSet(null)).foreach { case (_, _, b, sh) =>
-        b.unpersist(blocking = false); sh.unpersist(blocking = false)
-      }
-    }
-    Dedup.releaseCcResult()
-  }
-
-  /** One persisted synthetic-PNG payload corpus per (session, sf dir) —
-    * the ImageIO entry measures the DECODE tier; encoding the input
-    * corpus is scaffolding, so it is paid once (cold) and reused (warm),
-    * same convention as [[CuratedSlot]]. */
-  val PngSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, DataFrame)]()
-
-  /** One persisted synthetic-PNG corpus per (session, sf dir), shared
-    * by the full-decode and real-resize entries: ImageIO.write of a
-    * BufferedImage per doc with doc_id-derived dims and deterministic
-    * pixels — built once, so the entries time decode/resize, not
-    * corpus synthesis. */
+  /** Synthetic-PNG payloads shared by the full-decode and real-resize
+    * entries: ImageIO.write of a BufferedImage per doc with
+    * doc_id-derived dims and deterministic pixels, so the entries time
+    * decode/resize, not corpus synthesis. */
   def pngCorpus(s: SparkSession, dir: String): DataFrame =
-    PngSlot.synchronized {
-      Option(PngSlot.get()) match {
-        case Some((`s`, `dir`, df)) => df
-        case prev =>
-          val mkPng = udf((id: Long) =>
-            Multimodal.syntheticPngPixels((id % 41 + 8).toInt, (id * 3 % 41 + 8).toInt, id))
-          val fresh = docs(s, dir)
-            .select(col("doc_id"), mkPng(col("doc_id")).as("png"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          prev.foreach(_._3.unpersist())
-          PngSlot.set((s, dir, fresh))
-          fresh
-      }
+    persisted(Key("q_multimodal.png_corpus", s, dir)) {
+      val mkPng = udf((id: Long) =>
+        Multimodal.syntheticPngPixels((id % 41 + 8).toInt, (id * 3 % 41 + 8).toInt, id))
+      docs(s, dir).select(col("doc_id"), mkPng(col("doc_id")).as("png"))
     }
 
-  /** One persisted MinHash-LSH pair list per (session, sf dir) for the
-    * cluster-resolution entry: discovery is the expensive stage and an
-    * index a production run computes once, so warm bench timings measure
-    * the CLUSTER RESOLUTION path (the operator under test) while the
-    * cold run carries discovery — same convention as [[CuratedSlot]]. */
-  val LshPairsSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, DataFrame)]()
-
-  /** The slot-cached MinHash-LSH pair discovery shared by the cluster-
-    * resolution entries (q_dedup_clusters, q_dedup_keep_best). */
+  /** MinHash-LSH pair discovery shared by the cluster-resolution entries
+    * (q_dedup_clusters, q_dedup_keep_best), which time the resolution. */
   def lshPairsFor(s: SparkSession, dir: String): DataFrame =
-    LshPairsSlot.synchronized {
-      Option(LshPairsSlot.get()) match {
-        case Some((`s`, `dir`, cached)) => cached
-        case prev =>
-          val fresh = Dedup.minhashLshPairs(docs(s, dir), "doc_id", "text",
-              n = 3, numHashes = 128, bands = 32, threshold = 0.5)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          prev.foreach(_._3.unpersist())
-          LshPairsSlot.set((s, dir, fresh))
-          fresh
-      }
-    }
+    persisted(Key("q_dedup.lsh_pairs", s, dir, 3, 128, 32, 0.5))(
+      Dedup.minhashLshPairs(docs(s, dir), "doc_id", "text",
+        n = 3, numHashes = 128, bands = 32, threshold = 0.5))
 
-  /** One live (band index, shingle sets) pair for the "existing corpus"
-    * (doc_id < 300) per (session, sf dir), shared by the incremental
-    * near-dup entries — a production increment LOADS the persisted
-    * index rather than re-deriving it, so warm bench timings measure
-    * the delta search path while the cold run carries the index build
-    * (same fit-once/search-many convention as [[IvfSlot]]). */
-  val LshIndexSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, DataFrame, DataFrame)]()
-
-  def lshIndexFor(s: SparkSession, dir: String,
-                          existing: DataFrame): (DataFrame, DataFrame) =
-    LshIndexSlot.synchronized {
-      Option(LshIndexSlot.get()) match {
-        case Some((`s`, `dir`, b, sh)) => (b, sh)
-        case prev =>
-          val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-          val b = Dedup.lshBandIndex(existing, "doc_id", "text").persist(lvl)
-          val sh = Dedup.shingleSets(existing, "doc_id", "text").persist(lvl)
-          prev.foreach { case (_, _, ob, osh) => ob.unpersist(); osh.unpersist() }
-          LshIndexSlot.set((s, dir, b, sh))
-          (b, sh)
-      }
-    }
-
-  def ivfCentroidsFor(s: SparkSession, dir: String,
-                              corpus: DataFrame, nlist: Int): Array[Array[Double]] =
-    IvfSlot.synchronized { IvfSlot.get() match {
-      case (ss, d, c) if (ss eq s) && d == dir => c
-      case _ =>
-        val c = Similarity.ivfFitCentroids(corpus, nlist)
-        IvfSlot.set((s, dir, c)); c
-    }
-    }
-
-  /** One RESIDUAL PQ codebook set per (session, sf dir) — the residual
-    * sibling of [[PqSlot]] (fit depends on the coarse centroids, so it
-    * caches beside them). */
-  val PqResSlot =
-    new java.util.concurrent.atomic.AtomicReference[(SparkSession, String, Array[Array[Array[Double]]])]()
-
-  def pqResidualCodebooksFor(s: SparkSession, dir: String, corpus: DataFrame,
-                                     cents: Array[Array[Double]]): Array[Array[Array[Double]]] =
-    PqResSlot.synchronized { PqResSlot.get() match {
-      case (ss, d, c) if (ss eq s) && d == dir => c
-      case _ =>
-        val c = Similarity.pqFitResidualCodebooks(corpus, cents, m = 8, k = 16)
-        PqResSlot.set((s, dir, c)); c
-    }
-    }
+  /** The (band index, shingle sets) of the "existing corpus" (doc_id <
+    * 300) shared by the incremental near-dup entries of q_dedup and
+    * q_pipeline: an increment loads the saved index, so they time the
+    * delta search. */
+  def lshIndexFor(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    def existing = docs(s, dir).select(col("doc_id"), col("text")).where(col("doc_id") < 300)
+    (persisted(Key("q_pipeline.lsh_band_index", s, dir, 300))(
+      Dedup.lshBandIndex(existing, "doc_id", "text")),
+     persisted(Key("q_pipeline.lsh_shingle_sets", s, dir, 300))(
+      Dedup.shingleSets(existing, "doc_id", "text")))
+  }
 
   def docs(spark: SparkSession, dir: String): DataFrame =
     SparkEntry.loader(spark, dir)("documents")

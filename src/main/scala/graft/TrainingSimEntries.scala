@@ -275,7 +275,7 @@ private[graft] object TrainingSimEntries {
       val negPlant = anchors.select((col("vec_id") + 2000000L).as("vec_id"),
         col("embedding"), lit("__neg__").as("label"))
       val corpus = e.unionByName(posPlant).unionByName(negPlant)
-      val cents = ivfCentroidsFor(s, dir, corpus, nlist = 16)
+      val cents = ivfCentroidsFor(s, dir, corpus)
       val pos = Similarity.positivePairsIvf(corpus, anchors, k = 1, cents, nprobe = 8)
         .select(col("q_id"), lit("pos").as("role"),
           when(col("n_id") === col("q_id") + 1000000L, 1).otherwise(0).as("found"),
@@ -303,7 +303,7 @@ private[graft] object TrainingSimEntries {
       val anchors = e.where(col("vec_id") % 25 === 0)
       val planted = anchors.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val corpus = e.unionByName(planted)
-      val cents = ivfCentroidsFor(s, dir, corpus, nlist = 16)
+      val cents = ivfCentroidsFor(s, dir, corpus)
       val knn = Similarity.knnJoinIvf(corpus, k = 3, cents, nprobe = 8)
         .where(col("rank") === 1)
       val fwd = knn.where(col("q_id") < 1000000L && col("q_id") % 25 === 0)
@@ -349,7 +349,7 @@ private[graft] object TrainingSimEntries {
       val planted = queries.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val corpus = e.unionByName(planted)
       Similarity.ivfSearch(corpus, queries,
-          ivfCentroidsFor(s, dir, corpus, nlist = 16), k = 5, nprobe = 8)
+          ivfCentroidsFor(s, dir, corpus), k = 5, nprobe = 8)
         .groupBy(col("q_id"))
         .agg(max(when(col("n_id") === col("q_id") + 1000000L, 1).otherwise(0)).as("found"),
           round(max(col("sim")), 6).as("top_sim"))
@@ -376,7 +376,7 @@ private[graft] object TrainingSimEntries {
       val path = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         s"graft_ivf_idx_${ProcessHandle.current().pid()}", "ivf").toString
       Similarity.saveIvfCentroids(s, path,
-        ivfCentroidsFor(s, dir, corpus, nlist = 16))
+        ivfCentroidsFor(s, dir, corpus))
       Similarity.ivfSearch(corpus, queries,
           Similarity.loadIvfCentroids(s, path), k = 5, nprobe = 8)
         .groupBy(col("q_id"))
@@ -400,7 +400,7 @@ private[graft] object TrainingSimEntries {
       val planted = queries.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val path = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         s"graft_ivf_lists_${ProcessHandle.current().pid()}", "lists").toString
-      val cents = ivfCentroidsFor(s, dir, e, nlist = 16)
+      val cents = ivfCentroidsFor(s, dir, e)
       Similarity.ivfSaveAssignments(path, e, cents)
       Similarity.ivfAppendAssignments(path, planted, cents)
       Similarity.ivfSearchSaved(s, path, queries, cents, k = 5, nprobe = 8)
@@ -445,7 +445,7 @@ private[graft] object TrainingSimEntries {
       val planted = queries.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val corpus = e.unionByName(planted)
       Similarity.ivfPqTopK(corpus, queries, k = 5,
-          centroids = ivfCentroidsFor(s, dir, corpus, nlist = 16),
+          centroids = ivfCentroidsFor(s, dir, corpus),
           codebooks = pqCodebooksFor(s, dir, corpus),
           nprobe = 8, shortlist = 32)
         .groupBy(col("q_id"))
@@ -468,10 +468,10 @@ private[graft] object TrainingSimEntries {
       val queries = e.where(col("vec_id") < 20)
       val planted = queries.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
       val corpus = e.unionByName(planted)
-      val cents = ivfCentroidsFor(s, dir, corpus, nlist = 16)
+      val cents = ivfCentroidsFor(s, dir, corpus)
       Similarity.ivfPqResidualTopK(corpus, queries, k = 5,
           centroids = cents,
-          codebooks = pqResidualCodebooksFor(s, dir, corpus, cents),
+          codebooks = pqResidualCodebooksFor(s, dir, corpus),
           nprobe = 8, shortlist = 32)
         .groupBy(col("q_id"))
         .agg(max(when(col("n_id") === col("q_id") + 1000000L, 1).otherwise(0)).as("found"),
@@ -500,7 +500,7 @@ private[graft] object TrainingSimEntries {
       val idxPath = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         s"graft_ivf_idx_${ProcessHandle.current().pid()}", "ivfpq_index").toString
       Similarity.saveIvfPqIndex(s, idxPath,
-        ivfCentroidsFor(s, dir, corpus, nlist = 16), pqCodebooksFor(s, dir, corpus))
+        ivfCentroidsFor(s, dir, corpus), pqCodebooksFor(s, dir, corpus))
       val (loadedCents, loadedCbs) = Similarity.loadIvfPqIndex(s, idxPath)
       Similarity.ivfPqTopK(corpus, queries, k = 5,
           centroids = loadedCents,

@@ -118,7 +118,8 @@ object JxSql {
       * driver-divergence class: a 1-ulp pow drift upstream of a
       * comparison/floor/mod/when flips a DISCRETE decision and changes
       * the output arbitrarily, which no output-cell rendering-boundary
-      * audit can see; FuzzUlpMain measures exactly that sensitivity).
+      * audit can see; the r14 whole-tree ulp audit in COVERAGE.md §2.7
+      * measured exactly that sensitivity).
       * The double cast mirrors POW's double-returning contract (so the
       * pin changes no types), and `x*x*x` associates left in both
       * engines. General exponents keep POW, with the cross-libm caveat

@@ -687,7 +687,7 @@ object Dedup {
    * (the input pair list, each round's edge set) is unpersisted on the
    * way out — downstream actions read the one result RDD and never
    * re-run discovery or the iteration chain. At most ONE result stays
-   * resident per JVM: a one-slot holder unpersists the previous
+   * resident per JVM: a held registry entry unpersists the previous
    * invocation's result when a new one completes, so repeat invocations
    * (benchmarks, notebook re-runs) don't accumulate pinned RDDs. An
    * earlier keep-everything-cached variant showed up in driver benches
@@ -801,8 +801,7 @@ object Dedup {
       livePins += resRdd
       resRdd.count()
       livePins -= resRdd
-      val prevSmall = ccResultSlot.getAndSet(resRdd)
-      if (prevSmall != null && (prevSmall ne resRdd)) prevSmall.unpersist()
+      holdCcResult(resRdd)
       return spark.createDataFrame(resRdd, resSchemaS)
     }
     var (cur, curRdd) = pin(canonical)
@@ -840,7 +839,7 @@ object Dedup {
       .join(cur.select(col("u").as("node"), col("v").as("rep")), Seq("node"), "left")
       .select(col("node"), coalesce(col("rep"), col("node")).as("rep"))
     // eager materialization while the input + star pins are still live,
-    // then release everything except the one result RDD (slot-bounded
+    // then release everything except the one result RDD (held, bounded
     // across invocations — see the PERSIST LIFECYCLE scaladoc)
     val resRdd = result.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     livePins += resRdd
@@ -848,26 +847,20 @@ object Dedup {
     livePins -= resRdd
     unpin(baseRdd)
     unpin(curRdd)
-    val prev = ccResultSlot.getAndSet(resRdd)
-    if (prev != null && (prev ne resRdd)) prev.unpersist()
+    holdCcResult(resRdd)
     spark.createDataFrame(resRdd, resSchemaS)
     } catch { case e: Throwable =>
       livePins.foreach(_.unpersist(blocking = false)); throw e
     }
   }
 
-  /** Release the one-slot [[connectedComponents]] result holder (r13
-    * family drains): the slot is NOT a memo cache — every call
-    * recomputes and swaps it — so releasing when a bench family
-    * finishes costs nothing and frees the persisted cluster map. */
-  def releaseCcResult(): Unit =
-    Option(ccResultSlot.getAndSet(null)).foreach(_.unpersist(blocking = false))
-
-  /** One-slot holder for the last [[connectedComponents]] result RDD —
-    * bounds resident cache to a single live cluster map per JVM. */
-  private val ccResultSlot =
-    new java.util.concurrent.atomic.AtomicReference[
-      org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]()
+  /** Bound resident cache to one live [[connectedComponents]] result per
+    * JVM: it replaces the previous one, and Bench's hold drain releases
+    * it at a family boundary (every call recomputes, so that costs
+    * nothing). */
+  private def holdCcResult(r: org.apache.spark.rdd.RDD[_]): Unit =
+    graft.util.Artifacts.put(graft.util.Artifacts.Key(
+      Pinned.HoldPrefix + "dedup.connected_components"), r)(_.unpersist(blocking = false))
 
   /** One row per duplicate CLUSTER (transitively closed): representative
     * id (min), member count, member list capped at `maxMembers` for

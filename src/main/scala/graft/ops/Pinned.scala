@@ -89,12 +89,16 @@ object Pinned {
       override def initialValue() = new java.util.ArrayDeque[java.util.HashSet[RDD[_]]]()
     }
 
+  /** Registry prefix of [[hold]] results; Bench drains it at every
+    * family boundary. */
+  val HoldPrefix = "hold."
+
   /** One live result per key: checkpoint `df` (so the returned frame
     * references no intermediate the caller is about to release), then
-    * swap it into the named slot, releasing the previous occupant.
-    * Keys are per-operator (e.g. "graph.pagerank") — steady-state
-    * residency is bounded by the number of operator families, each
-    * holding one result-sized pin.
+    * put it in [[graft.util.Artifacts]] under `HoldPrefix + key`,
+    * releasing the previous occupant. Keys are per-operator (e.g.
+    * "graph.pagerank") — steady-state residency is bounded by the number
+    * of operator families, each holding one result-sized pin.
     *
     * CALLER-VISIBLE CONTRACT: re-invoking an operator that holds its
     * result INVALIDATES the frame the previous invocation returned —
@@ -106,31 +110,13 @@ object Pinned {
     * A caller that needs two results of the SAME operator live at once
     * must copy the first out (write it, or `.persist()` + action on a
     * `.toDF()` re-plan) before invoking again; distinct operators never
-    * contend (per-operator keys). Ops routing results through here are
-    * also EAGER — the checkpoint materializes at call time. */
+    * contend (per-operator keys). A drain of the prefix releases held
+    * results the same way. Ops routing results through here are also
+    * EAGER — the checkpoint materializes at call time. */
   def hold(key: String, df: DataFrame): DataFrame = {
     val (c, handle) = checkpoint(df)
     if (handle != null) frames.get().forEach(f => { f.remove(handle); () })
-    val prev = if (handle == null) slots.remove(key) else slots.put(key, handle)
-    if (prev != null && (prev ne handle)) release(prev)
+    graft.util.Artifacts.put(graft.util.Artifacts.Key(HoldPrefix + key), handle)(release(_))
     c
-  }
-
-  private val slots = new java.util.concurrent.ConcurrentHashMap[String, RDD[_]]()
-
-  /** Release every [[hold]] slot whose key starts with `prefix` —
-    * family-level lifecycle for a caller that knows a whole operator
-    * family is done with its results (r12, VERDICT r11 #2: the bench
-    * drains "graph." when its alphabetical pass leaves the graph
-    * entries, so the family's result-sized pins stop occupying the
-    * storage region every downstream entry then competes for).
-    * Released frames obey the [[hold]] contract: later actions on
-    * them throw rather than recompute. */
-  def drain(prefix: String): Unit = {
-    val it = slots.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(prefix)) { release(e.getValue); it.remove() }
-    }
   }
 }

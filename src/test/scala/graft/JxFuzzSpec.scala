@@ -642,6 +642,8 @@ class JxFuzzSpec extends AnyFunSuite {
     // the 10-significant-digit rounding; two values render the same
     // string iff these keys compare numerically equal (the int branch
     // "8" and the g branch's "8" meet at compareTo == 0)
+    def hasPow(e: JxExpr): Boolean =
+      JxExpr.treeExists(e) { case JxExpr.BinaryOp("exp", _, _, _) => true; case _ => false }
     def renderKey(v: Double): java.math.BigDecimal =
       if (v == v.toLong.toDouble && math.abs(v) < 1e15)
         java.math.BigDecimal.valueOf(v.toLong)
@@ -662,7 +664,7 @@ class JxFuzzSpec extends AnyFunSuite {
     val found = collection.mutable.Set[String]()
     for ((block, seed) <- Seq(("b1", 1001L), ("b2", 2002L), ("b3", 3003L), ("b4", 4004L))) {
       val cs = JxFuzz.cases(seed, 125)
-        .filter(c => c.ty == JxFuzz.TNum && FuzzPowMain.hasPow(c.expr))
+        .filter(c => c.ty == JxFuzz.TNum && hasPow(c.expr))
       if (cs.nonEmpty) {
         val out = dom.select(cs.map(c =>
           JxCompiler.compile(c.expr).cast("double").as(c.name)): _*).collect()

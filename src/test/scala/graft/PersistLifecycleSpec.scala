@@ -1,13 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.util.Artifacts
 
 /** Regression guard for the warm>cold bench pathology: repeat
   * invocations of slot-cached / iterative entries must NOT grow the set
   * of pinned RDDs. The round-4 driver bench showed warm runs SLOWER than
   * cold across the dedup family because every connectedComponents call
   * pinned fresh RDDs while prior pins stayed resident (LRU churn taxed
-  * every later query). The fix bounds residency with one-slot holders +
+  * every later query). The fix bounds residency with registry entries +
   * eager materialization; this spec pins the bound itself: pinned-RDD
   * count after run N+1 equals the count after run N, for the entries
   * that persist anything. */
@@ -21,9 +22,9 @@ class PersistLifecycleSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, dir).collect()
 
   test("repeat invocations hold the pinned-RDD count flat (no accumulation)") {
-    // entries that persist: CC result slot + LSH pair slot
-    // (q_dedup_clusters), curated-corpus slot (q_pipeline_curate),
-    // extract increment (transient), resume scratch (q_etl_extract_resume)
+    // entries that persist: held CC result + LSH pair list
+    // (q_dedup_clusters), curated corpus (q_pipeline_curate), extract
+    // increment (transient), resume scratch (q_etl_extract_resume)
     val entries = Seq("q_dedup_clusters", "q_pipeline_curate", "q_etl_extract_resume")
     entries.foreach(runEntry) // warm the slots
     val afterFirst = pinned
@@ -99,64 +100,67 @@ class PersistLifecycleSpec extends AnyFunSuite {
       s"q_budget_mix read ${entryPass}B vs single-pass ${onePass}B — corpus scanned more than once")
   }
 
+  private def drainGraph(): Unit = Artifacts.drain("q_graph.")
+  private def live(name: String): Seq[Artifacts.Key] = Artifacts.keys(name).filter(_.parts.head == spark)
+
   test("r13: sketchCandidates keys its slot by the degree guard") {
     // a cache hit with a DIFFERENT k must rebuild, not silently serve
-    // the old guard's pair list (the slot is (session, dir, k)-keyed)
-    TrainingShared.drainGraphSlots()
+    // the old guard's pair list (the key carries (session, dir, k))
+    drainGraph()
     val a = TrainingShared.sketchCandidates(spark, dir, k = 24)
     val b = TrainingShared.sketchCandidates(spark, dir, k = 24)
-    assert(a eq b, "same-k call rebuilt the slot")
+    assert(a eq b, "same-k call rebuilt the artifact")
     val c = TrainingShared.sketchCandidates(spark, dir, k = 8)
     assert(!(c eq b), "k change served the old guard's candidates")
-    assert(TrainingShared.SketchCandSlot.get()._3 == 8, "slot key not updated")
-    TrainingShared.drainGraphSlots()
+    assert(live("q_graph.sketch_candidates").map(_.parts.last) == Seq(8), "key not updated")
+    drainGraph()
   }
 
   test("r13: the nested assembly cache drains fully and refills on demand") {
     // VERDICT r12 #4: the ~150 MB of persisted doc assemblies was the
     // residency the one-family drain discipline missed. The bench
-    // drains it when the bulk consumer families finish (q_nested) and
-    // after its last consumer (q_window); this pins the drain's
-    // contract: all sessions' assemblies release, and a later consumer
-    // rebuilds transparently.
+    // drains it when the bulk consumer family (q_nested) finishes and
+    // at the end of the pass; this pins the drain's contract: every
+    // session's assemblies release, and a later consumer rebuilds
+    // transparently.
     runEntry("q_nested_agg") // populates at least one assembly
     assert(NestedCatalog.cachedAssemblies(spark) > 0, "no assembly cached")
-    NestedCatalog.clearAllCaches()
-    assert(NestedCatalog.cachedAssemblies(spark) == 0, "assemblies survived clearAllCaches")
+    Artifacts.drain("q_nested.")
+    assert(Artifacts.keys(NestedCatalog.AssemblyKey).isEmpty, "assemblies survived the drain")
     val rows = SparkEntry.queries("q_nested_agg")(spark, dir).count()
     assert(rows > 0, "entry failed after the cache drain")
     assert(NestedCatalog.cachedAssemblies(spark) > 0, "cache did not refill on demand")
-    NestedCatalog.clearAllCaches()
+    Artifacts.drain("q_nested.")
   }
 
   test("r12: shared capped frame is stable across siblings and the graph drain releases residency") {
     // VERDICT r11 #2/#3: the three capped-derived entries share ONE
-    // checkpointed capped result (no per-entry wedge join, no hold-slot
+    // checkpointed capped result (no per-entry wedge join, no hold
     // eviction ping-pong), and the family drain releases the edge +
-    // capped slots AND the graph ops' result holds so nothing from the
+    // capped artifacts and the held results so nothing from the
     // family stays resident for downstream families.
     val entries = Seq("q_graph_adamic_adar_capped", "q_graph_adamic_adar_rescore",
       "q_graph_adamic_adar_sketch")
     entries.foreach(runEntry)
     val c1 = TrainingShared.cappedRecentAa(spark, dir)
     val sc1 = TrainingShared.sketchCandidates(spark, dir)
-    entries.foreach(runEntry) // siblings must not evict the shared slots
+    entries.foreach(runEntry) // siblings must not evict the shared artifacts
     val c2 = TrainingShared.cappedRecentAa(spark, dir)
     val sc2 = TrainingShared.sketchCandidates(spark, dir)
     assert(c1 eq c2, "shared capped frame was rebuilt by a sibling entry")
     assert(sc1 eq sc2, "shared sketch-candidate frame was rebuilt by a sibling entry")
+    assert(Seq("q_graph.recent_edges", "q_graph.capped_aa", "q_graph.sketch_candidates")
+      .forall(live(_).nonEmpty), "a graph artifact is missing before the drain")
     val before = pinned
-    TrainingShared.drainGraphSlots()
-    assert(TrainingShared.EdgeSlot.get() == null
-      && TrainingShared.RecentEdgeSlot.get() == null
-      && TrainingShared.CappedAaSlot.get() == null
-      && TrainingShared.SketchCandSlot.get() == null, "a graph slot survived the drain")
+    drainGraph()
+    Artifacts.drain(graft.ops.Pinned.HoldPrefix)
+    assert(Artifacts.keys("q_graph.").isEmpty, "a graph artifact survived the drain")
     val after = pinned
     assert(after < before,
       s"drain released no pinned RDDs: $before -> $after")
-    // slots refill on demand: the family still works after a drain
+    // artifacts refill on demand: the family still works after a drain
     runEntry("q_graph_adamic_adar_rescore")
-    assert(TrainingShared.CappedAaSlot.get() != null, "capped slot did not refill")
-    TrainingShared.drainGraphSlots()
+    assert(live("q_graph.capped_aa").nonEmpty, "capped artifact did not refill")
+    drainGraph()
   }
 }

@@ -6,9 +6,10 @@ package graft
   * attribution protocol for warm>cold inversion flags, runnable
   * outside the full bench. Usage:
   *   Test/runMain graft.ProbeMain <entry[,entry...]> <sfDir> <n> [drain]
-  * With the 4th arg `drain`, every run starts slot-cold (graph family
-  * drained first) — measures an entry's STANDALONE cost on a JIT-warm
-  * JVM, the bound VERDICT r12 #2 asks for.
+  * With the 4th arg `drain`, every run starts artifact-cold (the whole
+  * [[graft.util.Artifacts]] registry drained first) — measures an
+  * entry's STANDALONE cost on a JIT-warm JVM, the bound VERDICT r12 #2
+  * asks for.
   */
 object ProbeMain {
   def main(args: Array[String]): Unit = {
@@ -21,7 +22,7 @@ object ProbeMain {
     def gcMs: Long = { var t = 0L; gcBeans.forEach(b => t += b.getCollectionTime); t }
     for (name <- names; i <- 1 to n) {
       val fn = SparkEntry.queries(name)
-      if (drainEach && i > 1) TrainingShared.drainGraphSlots()
+      if (drainEach && i > 1) graft.util.Artifacts.drain("")
       val g0 = gcMs
       val t0 = System.nanoTime()
       val rows = fn(spark, dir).count()

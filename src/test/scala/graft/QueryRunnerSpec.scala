@@ -23,16 +23,10 @@ class QueryRunnerSpec extends AnyFunSuite {
       "duplicate entry name across catalogs (one shadowed)")
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without a query: $orphans")
-    // r12: the two name-keyed registries must reference entries that
-    // exist — a phantom benchExcluded row makes a subset run naming it
-    // silently time nothing, and a familyDrains key that matches no
-    // entry family means the drain never fires (the r11 residency
-    // regression's failure mode, silently reintroduced)
+    // r12: a phantom benchExcluded row makes a subset run naming it
+    // silently time nothing
     val phantom = SparkEntry.benchExcluded -- SparkEntry.queries.keySet
     assert(phantom.isEmpty, s"benchExcluded names no existing entry: $phantom")
-    val fams = SparkEntry.queries.keySet.map(SparkEntry.entryFamily)
-    val deadDrains = SparkEntry.familyDrains.keySet -- fams
-    assert(deadDrains.isEmpty, s"familyDrains keys matching no entry family: $deadDrains")
   }
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
@@ -40,6 +34,17 @@ class QueryRunnerSpec extends AnyFunSuite {
       val df = fn(spark, dir)
       assert(df.count() > 0, s"$name returned no rows")
     }
+  }
+
+  test("every registry artifact is owned by an entry family or the hold prefix") {
+    // Bench drains an artifact when its pass leaves the family its key
+    // names: an owner that matches no entry family never drains (the
+    // r11 residency regression's failure mode). Runs after the loop
+    // above, so every entry's artifacts are live.
+    val fams = SparkEntry.queries.keySet.map(SparkEntry.entryFamily)
+    val orphans = graft.util.Artifacts.keys("").map(_.name)
+      .filterNot(n => n.startsWith(graft.ops.Pinned.HoldPrefix) || fams(n.takeWhile(_ != '.')))
+    assert(orphans.isEmpty, s"artifacts owned by no entry family: ${orphans.distinct}")
   }
 
   test("edges densify: set-domain cube has exactly parts+null rows") {
@@ -128,7 +133,7 @@ class QueryRunnerSpec extends AnyFunSuite {
   }
 
   test("NestedCatalog assembly cache is LRU-bounded per session and unpersists evictions") {
-    NestedCatalog.clearCache(spark)
+    graft.util.Artifacts.drain(NestedCatalog.AssemblyKey)
     val extras = Seq("c_name", "c_address", "c_phone", "c_acctbal", "c_mktsegment", "c_comment")
     // 18 distinct (needed) keys — enough to overflow the per-session bound
     val neededSets = (extras.combinations(1) ++ extras.combinations(2))
@@ -139,7 +144,7 @@ class QueryRunnerSpec extends AnyFunSuite {
     assert(NestedCatalog.cachedAssemblies(spark) <= 16)
     assert(first.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "evicted assembly must be unpersisted")
-    NestedCatalog.clearCache(spark)
+    graft.util.Artifacts.drain(NestedCatalog.AssemblyKey)
     assert(NestedCatalog.cachedAssemblies(spark) === 0)
   }
 
