@@ -256,10 +256,7 @@ class FactStore(val spark: SparkSession, val name: String, dir: Path) extends Co
     val stats = graft.ops.Layout.compact(spark,
       dir.resolve(s"v$v").toString, dir.resolve(s"v${v + 1}").toString,
       targetFileBytes, order)
-    val tmp = dir.resolve("_CURRENT.tmp")
-    Files.writeString(tmp, (v + 1).toString)
-    Files.move(tmp, marker, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.util.Fs.writeAtomically(marker, (v + 1).toString)
     (stats.filesBefore, stats.filesAfter)
   }
 
@@ -297,10 +294,7 @@ class FactStore(val spark: SparkSession, val name: String, dir: Path) extends Co
     // mutation re-reads this snapshot and skips the footer job
     snapshotSchemas(next) =
       asReadBack(sized.schema).asInstanceOf[org.apache.spark.sql.types.StructType]
-    val tmp = dir.resolve("_CURRENT.tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, marker, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.util.Fs.writeAtomically(marker, next.toString)
   }
 
   def insert(docs: DataFrame): this.type = {
@@ -324,13 +318,7 @@ class FactStore(val spark: SparkSession, val name: String, dir: Path) extends Co
   def tag(name: String, v: Int): this.type = {
     require(name.matches("[A-Za-z0-9._-]+"), s"tag name: $name")
     require(versions.contains(v), s"no snapshot v$v to tag (have: $versions)")
-    val td = dir.resolve("tags")
-    Files.createDirectories(td)
-    val tmp = td.resolve(s".$name.tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, td.resolve(name),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    graft.util.Fs.writeAtomically(dir.resolve("tags").resolve(name), v.toString)
     this
   }
 

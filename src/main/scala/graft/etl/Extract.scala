@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Path}
 
 /**
  * Incremental snowflake extract: filter the fact table past the watermark,
@@ -13,9 +13,13 @@ import java.nio.file.{Files, Paths, Path}
  * (reference: mysql_to_s3/extract.py:92-254).
  *
  * The reference enumerates ids with a keyset-paginated driver loop and a
- * thread pool; Spark-natively the whole increment is ONE distributed pass:
- * predicate-pushdown scan → coordinate assignment → doc assembly →
- * partitioned write. Batch coordinates reproduce the counter chain
+ * thread pool; Spark-natively one increment is one cached scan, one
+ * aggregate and one write. The keyset-filtered fact rows, stamped with
+ * their duration bucket, are cached; ONE per-bucket aggregate over the
+ * cache (row count + last (time, id) key) gives the driver the row total,
+ * the batch keys, the watermark and the indexing path; the write then
+ * ranks the cached rows, assembles the docs around them and writes one
+ * object per batch key. Batch coordinates reproduce the counter chain
  * ([[DurationCounter]]/[[BatchCounter]]) exactly: the duration bucket is
  * pure arithmetic; the in-bucket batch index is the 0-based (time, id)
  * rank over the bucket — a per-bucket window for modest increments, a
@@ -95,8 +99,13 @@ object Extract {
         }
     }
 
-    // 2. batch coordinates
-    val withDur = cfg.timeField match {
+    // 2. batch coordinates: the duration bucket of every row, cached — the
+    //    aggregate and the write both read this ONE materialization, so the
+    //    source is scanned once and the watermark, the notifications and
+    //    the written objects all describe the same rows. At 100 TB the
+    //    increment is watermark-bounded: the standard bounded-working-set
+    //    persist, and only the narrow fact rows (no docs) are held.
+    val withDur = (cfg.timeField match {
       case Some((tf, unit)) =>
         val startFloor = unit.floor(cfg.start).getEpochSecond
         val durKey = unit match {
@@ -123,94 +132,92 @@ object Extract {
                 "requires a non-null time column; clean or default it upstream"))
               .cast("long")))
       case None => fact.withColumn("__dur", lit(0L))
-    }
-    val order = cfg.timeField.map(t => col(t._1)).toSeq :+ col(cfg.idField)
-    // batch indices RESUME within a duration bucket the previous run
-    // already wrote to: new rows in the watermark's bucket start at
-    // recorded-batch + 1, so this run's keys can never collide with —
-    // and dynamic-overwrite can never delete — an earlier increment's
-    // objects (the counter-replay contract of the reference's
-    // BatchCounter, distributed). Later buckets start at 0 as usual.
-    val batchBase = prev match {
-      case Some(pw) if pw.coords.size >= 2 =>
-        when(col("__dur") === lit(pw.coords(0)), lit(pw.coords(1) + 1)).otherwise(lit(0L))
-      case _ => lit(0L)
-    }
-    // in-bucket sequence number: per-bucket window below the threshold
-    // (one shuffle, fine for modest increments), distributed prefix-sum
-    // rank above it (a window serializes each duration bucket through ONE
-    // task — a production bucket is a day; at 100 TB that is one executor
-    // sorting a day of keys). Both assign identical 0-based (time, id)
-    // ranks, so batch keys are byte-identical across the two paths
-    // (asserted in EtlSpec). The bucket-size probe is an aggregate over a
-    // column-pruned scan (only the time column is read) reduced to ONE
-    // driver scalar — fine-grained duration units can have millions of
-    // buckets, so the inventory must never be collected.
-    val maxBucket = withDur.groupBy(col("__dur")).count()
-      .agg(coalesce(max(col("count")), lit(0L))).head().getLong(0)
-    val seqd =
-      if (maxBucket > cfg.scaledIndexThreshold)
-        graft.ops.Batching.rankWithinScaled(withDur, "__dur", order, out = "__seq")
-      else {
-        val w = Window.partitionBy(col("__dur")).orderBy(order: _*)
-        withDur.withColumn("__seq", (row_number().over(w) - lit(1)).cast("long"))
-      }
-    // persist the increment: the write, the watermark aggregate and the
-    // batch inventory all read this ONE materialization instead of
-    // re-scanning the source (and re-assembling docs) per consumer —
-    // at 100 TB the increment is watermark-bounded, so this is the
-    // standard bounded-working-set persist
-    val withBatch = seqd
-      .withColumn("__batch",
-        (col("__seq") / lit(cfg.batchSize)).cast("long") + batchBase)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // 3. ONE aggregate over the persisted increment: row count, watermark
-      //    coordinates AND the batch inventory (bounded: #batches ≤
-      //    rows/batchSize) — no second scan, no re-assembly
-      // watermark coords = the LAST WRITTEN KEY: lexicographic max of
-      // (__dur, __batch) — independent maxima would pair the last bucket
-      // with another bucket's batch index, a coordinate no row ever had,
-      // and the resume base would then leave holes in the key sequence
-      val agg = withBatch.agg(
-        count(lit(1)), max(struct(col("__dur"), col("__batch"))),
-        // the (time, id) watermark is the LAST KEY in keyset order —
-        // lexicographic max of the pair, the same rationale the coords
-        // max(struct) above documents. Independent maxima (max(time),
-        // max(id)) are WRONG whenever ids are not monotone with time:
-        // lastId then exceeds the largest id actually extracted AT
-        // lastTime, and the resume filter's `time = lastTime AND
-        // id > lastId` arm permanently skips the rows in between
-        // (r12, found by ExtractFuzzSpec's random resume schedules —
-        // every schedule lost exactly the boundary rows; the reference
-        // records the final row of the ordered batch, extract.py:254,
-        // never column-wise maxima). Cast: a DATE time axis still
-        // records a Timestamp watermark.
-        max(struct(
-          cfg.timeField.map(t => col(t._1).cast("timestamp"))
-            .getOrElse(lit(null).cast("timestamp")).as("t"),
-          col(cfg.idField).as("i"))),
-        collect_set(struct(col("__dur"), col("__batch")))).collect()(0)
-      val rows = agg.getLong(0)
-      val batchKeys: Seq[(Long, Long)] =
-        agg.getSeq[org.apache.spark.sql.Row](3).map(r => (r.getLong(0), r.getLong(1))).sorted
-      if (rows == 0) {
+      // 3. ONE aggregate over the cache: per non-empty bucket, its row
+      //    count and its last key in keyset order. The (time, id)
+      //    watermark is the lexicographic max of the pair: independent
+      //    maxima (max(time), max(id)) are WRONG whenever ids are not
+      //    monotone with time — lastId then exceeds the largest id
+      //    actually extracted AT lastTime, and the resume filter's
+      //    `time = lastTime AND id > lastId` arm permanently skips the
+      //    rows in between (r12, found by ExtractFuzzSpec's random resume
+      //    schedules; the reference records the final row of the ordered
+      //    batch, extract.py:254). Cast: a DATE time axis still records a
+      //    Timestamp watermark. The collect holds one row per non-empty
+      //    bucket — never more than the batch keys this run writes (and
+      //    notifies), so the driver holds no more than the write's own
+      //    inventory.
+      val buckets = withDur.groupBy(col("__dur")).agg(count(lit(1)), max(struct(
+        cfg.timeField.map(t => col(t._1).cast("timestamp"))
+          .getOrElse(lit(null).cast("timestamp")).as("t"),
+        col(cfg.idField).as("i"))))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getStruct(2))).sortBy(_._1).toSeq
+      if (buckets.isEmpty) {
         // nothing to write → nothing notified, destination untouched, and
         // the watermark must NOT move (a time-less watermark would poison
         // the next keyset filter)
         ExtractResult(0L, 0L, prev.getOrElse(Watermark(Seq(0, 0), None, Long.MinValue)))
       } else {
-        // 4. assemble docs for exactly these fact rows + lineage envelope,
+        // batch indices RESUME within a duration bucket the previous run
+        // already wrote to: new rows in the watermark's bucket start at
+        // recorded-batch + 1, so this run's keys can never collide with —
+        // and dynamic-overwrite can never delete — an earlier increment's
+        // objects (the counter-replay contract of the reference's
+        // BatchCounter, distributed). Other buckets start at 0; a
+        // time-less config has the single bucket 0.
+        val resume = prev.collect { case pw if pw.coords.size >= 2 => (pw.coords(0), pw.coords(1) + 1) }
+        def base(d: Long): Long = resume.collect { case (rd, b) if rd == d => b }.getOrElse(0L)
+        val batchKeys = buckets.flatMap { case (d, n, _) =>
+          (0L until (n + cfg.batchSize - 1) / cfg.batchSize).map(b => (d, base(d) + b))
+        }
+        // the LAST WRITTEN KEY: the last bucket's last batch. The bucket is
+        // monotone in time, so the last bucket also holds the (time, id)
+        // watermark.
+        val lastRow = buckets.last._3
+        val wm = Watermark(Seq(batchKeys.last._1, batchKeys.last._2),
+          Option(lastRow.get(0)).map(_.asInstanceOf[java.sql.Timestamp]), lastRow.getLong(1))
+
+        // 4. in-bucket sequence number: per-bucket window up to the
+        //    threshold (one shuffle, fine for modest increments),
+        //    distributed prefix-sum rank above it (a window serializes each
+        //    duration bucket through ONE task — a production bucket is a
+        //    day; at 100 TB that is one executor sorting a day of keys).
+        //    Both assign identical 0-based (time, id) ranks, so batch keys
+        //    are byte-identical across the two paths (asserted in EtlSpec).
+        val order = cfg.timeField.map(t => col(t._1)).toSeq :+ col(cfg.idField)
+        val seqd =
+          if (buckets.map(_._2).max > cfg.scaledIndexThreshold)
+            graft.ops.Batching.rankWithinScaled(withDur, "__dur", order, out = "__seq")
+          else {
+            val w = Window.partitionBy(col("__dur")).orderBy(order: _*)
+            withDur.withColumn("__seq", (row_number().over(w) - lit(1)).cast("long"))
+          }
+        val batchBase = resume.fold(lit(0L)) { case (rd, b) =>
+          when(col("__dur") === lit(rd), lit(b)).otherwise(lit(0L))
+        }
+        val ranked = seqd.withColumn("__batch",
+          (col("__seq") / lit(cfg.batchSize)).cast("long") + batchBase)
+
+        // 5. assemble docs around the ranked fact rows + lineage envelope,
         //    partitioned gzip NDJSON write (reference extract.py:208-242:
-        //    one S3 object per batch key). DYNAMIC partition overwrite:
-        //    an incremental run replaces only the batch keys it produced —
-        //    earlier increments' objects stay, and re-running a failed
-        //    increment overwrites its own keys idempotently (static mode
-        //    would truncate the whole destination every run).
-        val assembled = joinAssembled(cfg.plan, withBatch, load)
-        val docCols = assembled.columns.filterNot(Set("__dur", "__seq", "__batch"))
+        //    one S3 object per batch key). The coordinate columns ride
+        //    through the assembly on the fact rows. `restrictChildren`:
+        //    child tables are semi-joined down to the increment's keys
+        //    BEFORE their collect_list — an increment touching 0.01% of
+        //    parents must not re-aggregate 100% of children. DYNAMIC
+        //    partition overwrite: an incremental run replaces only the
+        //    batch keys it produced — earlier increments' objects stay,
+        //    and re-running a failed increment overwrites its own keys
+        //    idempotently (static mode would truncate the whole
+        //    destination every run).
+        val assembled = DocAssembler.assemble(cfg.plan,
+          name => if (name == cfg.plan.table) ranked else load(name), restrictChildren = true)
+        val coordCols = Set("__dur", "__seq", "__batch")
+        val docCols = cfg.plan.key +:
+          assembled.columns.filterNot(c => coordCols(c) || c == cfg.plan.key).toSeq
         val docs = assembled.select(
-          struct(docCols.map(col).toIndexedSeq: _*).as(cfg.plan.table),
+          struct(docCols.map(col): _*).as(cfg.plan.table),
           struct(
             col("__seq").as("id"),
             struct(lit(cfg.plan.table).as("table"),
@@ -232,33 +239,15 @@ object Extract {
           .option("compression", "gzip")
           .json(cfg.destination)
 
-        val lastKey = agg.getStruct(1)
-        val lastRow = agg.getStruct(2)
-        val wm = Watermark(
-          Seq(lastKey.getLong(0), lastKey.getLong(1)),
-          Option(lastRow.get(0)).map(_.asInstanceOf[java.sql.Timestamp]),
-          lastRow.getLong(1))
         // notify per written batch object (reference extract.py:244-251),
         // then advance the watermark (extract.py:254)
         val now = java.time.Instant.now()
         for ((t, b) <- batchKeys)
           cfg.notifier.add(Notifier.batchMessage(cfg.destination, s"$t.$b", now))
         writeWatermark(cfg.lastFile, wm)
-        ExtractResult(rows, batchKeys.size.toLong, wm)
+        ExtractResult(buckets.map(_._2).sum, batchKeys.size.toLong, wm)
       }
-    } finally withBatch.unpersist()
-  }
-
-  /** Assemble docs only for the given fact subset (keeps coordinate cols).
-    * `restrictChildren`: child tables are semi-joined down to the
-    * increment's keys BEFORE their collect_list — an increment touching
-    * 0.01% of parents must not re-aggregate 100% of children. */
-  private def joinAssembled(plan: SnowflakePlan, factSubset: DataFrame, load: String => DataFrame): DataFrame = {
-    val filteredLoad: String => DataFrame =
-      name => if (name == plan.table) factSubset.drop("__dur", "__seq", "__batch") else load(name)
-    val docs = DocAssembler.assemble(plan, filteredLoad, restrictChildren = true)
-    docs.join(factSubset.select(col(plan.key), col("__dur"), col("__seq"), col("__batch")),
-      Seq(plan.key), "inner")
+    } finally withDur.unpersist()
   }
 
   // -- watermark file: {"coords":[t,b], "lastTime":"...", "lastId":n} -------
@@ -279,8 +268,9 @@ object Extract {
 
   def writeWatermark(p: Path, w: Watermark): Unit = {
     val t = w.lastTime.map(ts => "\"" + ts.toInstant.toString + "\"").getOrElse("null")
-    Files.createDirectories(p.toAbsolutePath.getParent)
-    Files.writeString(p,
+    // atomic replace: a crash or a concurrent reader never sees a
+    // truncated watermark
+    graft.util.Fs.writeAtomically(p,
       s"""{"coords":[${w.coords.mkString(",")}],"lastTime":$t,"lastId":${w.lastId}}""")
   }
 }

@@ -77,9 +77,11 @@ object DocAssembler {
       df = df.select(cols.map(col).toIndexedSeq: _*)
     }
     for ((c, keys) <- keyFilter) df = df.join(keys, Seq(c), "left_semi")
-    // child restriction keys, taken BEFORE lookup joins widen the plan
+    // child restriction keys, taken BEFORE lookup joins widen the plan;
+    // no distinct: they only feed a left-semi join, which duplicate build
+    // keys do not change
     val ownKeys = if (restrictChildren && keptChildren.nonEmpty)
-      Some(df.select(col(plan.key)).distinct()) else None
+      Some(df.select(col(plan.key))) else None
     val dropFks = scala.collection.mutable.ArrayBuffer[String]()
 
     for (lk <- keptLookups) {

@@ -11,7 +11,11 @@ import graft.etl.Config
 class ConfigSpec extends AnyFunSuite {
 
   test("reference treeherder.json parses into a faithful WalkConfig") {
-    val c = Config.loadFile(Paths.get("/root/reference/resources/config/treeherder.json"))
+    // the reference checkout sits beside this repository and is not part
+    // of it: cancel, like the MySQL-gated cases, where it is absent
+    val ref = Paths.get("../reference/resources/config/treeherder.json").toAbsolutePath.normalize
+    assume(Files.exists(ref), s"reference config $ref not present")
+    val c = Config.loadFile(ref)
     assert(c.snowflake.factTable === "job")
     assert(!c.snowflake.showForeignKeys)
     assert(c.snowflake.nullValues === Seq("-", "unknown", ""))

@@ -1,6 +1,7 @@
 package graft
 
 import java.time.Instant
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl._
@@ -13,6 +14,44 @@ class EtlSpec extends AnyFunSuite {
   private def weekChain(): BatchCounterLike =
     new DurationCounter(Instant.parse("2024-01-01T00:00:00Z"), DurationUnit.Week,
       new BatchCounter(0, 3, new RowCounter(0)))
+
+  private val Sentinel = "__etl_spec_sentinel"
+
+  /** Runs `f` and returns its result with the number of Spark jobs and
+    * the names of the SQL executions it started. Both listeners sit on
+    * Spark's shared listener queue, which delivers events in order: once
+    * a job-free sentinel query's execution is seen, every event of `f`
+    * has been delivered. */
+  private def counted[T](f: => T): (T, Int, Seq[String]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val execListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == Sentinel)) drained.countDown()
+        else execs.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        execs.add(funcName)
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(execListener)
+    try {
+      val r = f
+      // a local relation collects on the driver: an execution, no job
+      import spark.implicits._
+      Seq(1).toDF(Sentinel).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener events did not drain")
+      (r, jobs.get(), execs.toArray.toSeq.map(_.toString))
+    } finally {
+      spark.listenerManager.unregister(execListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+  }
 
   private val keys: Seq[Seq[Any]] = {
     // strictly-increasing (time, id) tuples spanning two weeks
@@ -99,19 +138,7 @@ class EtlSpec extends AnyFunSuite {
       lastFile = tmp.resolve("last.json"),
       notifier = m => notifications.synchronized { notifications += m })
 
-    // count scan jobs: the increment must be read ONCE (persisted), not
-    // re-scanned by the watermark aggregate and the batch inventory
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val r = try {
-      val r = Extract.run(spark, cfg, load)
-      Thread.sleep(500) // let queued listener events drain
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (r, jobs, execs) = counted(Extract.run(spark, cfg, load))
 
     assert(r.batches > 1)
     // exactly one message per (batch_t, batch_i), reference message shape
@@ -125,16 +152,17 @@ class EtlSpec extends AnyFunSuite {
       assert(m("bucket") === cfg.destination)
       assert(m.contains("timestamp") && m.contains("date/time"))
     }
-    // AQE splits the partitioned write into ~10 jobs; on top: ONE
-    // watermark+inventory aggregate over the persisted increment, ONE
-    // bucket-size probe (column-pruned aggregate picking the indexing
-    // path), and ONE broadcast build of the increment's key set for the
-    // child semi-join (restrictChildren) — all bounded jobs over the
-    // persisted increment, the SOURCE is still scanned once (measured:
-    // 14). The pre-fix pipeline re-scanned the source for the watermark
-    // and re-assembled docs for countDistinct — several extra multi-stage
-    // jobs on top.
-    assert(jobs.get() <= 15, s"expected a single-pass extract, saw ${jobs.get()} jobs")
+    // one increment = one cached scan, one aggregate, one write: exactly
+    // two SQL executions, the per-bucket aggregate (its collect gives the
+    // driver rows, batch keys and watermark) and the write, which ranks
+    // the cached rows, semi-joins the children down to the increment's
+    // keys and assembles the docs around the ranked rows. A bucket-size
+    // probe would add an execution, a coordinate re-join jobs to the
+    // write. Jobs: the aggregate's scan of the source into the cache, then
+    // AQE's stages of the write and the broadcast of the key set;
+    // measured 9.
+    assert(execs.size === 2, s"expected aggregate + write, saw $execs")
+    assert(jobs <= 9, s"expected a single-pass extract, saw $jobs jobs")
 
     // FileNotifier round-trips the same shape as NDJSON
     val fn = new Notifier.FileNotifier(tmp.resolve("notify.ndjson"))
@@ -213,6 +241,91 @@ class EtlSpec extends AnyFunSuite {
     Extract.writeWatermark(cfg.lastFile, Watermark(Seq(3L, 2L), None, 42L))
     val ex2 = intercept[IllegalStateException] { Extract.run(spark, cfg, full) }
     assert(ex2.getMessage.contains("no lastTime"))
+  }
+
+  test("time-less extract: a resumed schedule equals the one-shot; an empty increment writes nothing") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_etl_timeless")
+    val full = SparkEntry.loader(spark, "/root/testdata/sf0.001")
+    val plan = SnowflakePlan("orders", "o_orderkey",
+      children = Seq(Child("l_orderkey", "lineitems", SnowflakePlan("lineitem", "l_orderkey"))))
+    def cfg(name: String, sent: scala.collection.mutable.Buffer[String]) = ExtractConfig(
+      plan, timeField = None, idField = "o_orderkey", batchSize = 100,
+      start = Instant.parse("1992-01-01T00:00:00Z"),
+      destination = tmp.resolve(name).toString, lastFile = tmp.resolve(name + ".last.json"),
+      notifier = m => sent.synchronized { sent += m("key").toString })
+    // every row is in bucket 0, whose batch base resumes from the
+    // watermark coordinates. Cuts on batch boundaries (300 and 800 ids)
+    // keep the keys of both schedules equal; a mid-batch cut starts a
+    // new batch (ExtractFuzzSpec covers those)
+    val ids = full("orders").select(col("o_orderkey")).orderBy("o_orderkey")
+      .collect().map(_.getLong(0))
+    assert(ids.length > 800)
+    def upTo(last: Long): String => org.apache.spark.sql.DataFrame = name =>
+      if (name == "orders") full(name).filter(col("o_orderkey") <= last) else full(name)
+
+    val oneSent = scala.collection.mutable.ArrayBuffer[String]()
+    val one = Extract.run(spark, cfg("one", oneSent), full)
+    val incSent = scala.collection.mutable.ArrayBuffer[String]()
+    val incCfg = cfg("inc", incSent)
+    val steps = Seq(upTo(ids(299)), upTo(ids(799)), full).map { load =>
+      val (r, _, execs) = counted(Extract.run(spark, incCfg, load))
+      assert(execs.size === 2, s"expected aggregate + write, saw $execs")
+      r
+    }
+    assert(steps.map(_.rows) === Seq(300L, 500L, ids.length - 800L))
+    assert(steps.map(_.batches).sum === one.batches)
+    assert(steps.last.watermark === one.watermark)
+    assert(one.watermark.coords === Seq(0L, one.batches - 1) && one.watermark.lastTime.isEmpty &&
+      one.watermark.lastId === ids.last)
+    assert(incSent === oneSent, "notified keys or their order differ")
+    def written(name: String): Seq[String] =
+      spark.read.json(tmp.resolve(name).toString)
+        .select(concat_ws("|", col("batch_t"), col("batch_i"), to_json(col("orders"))))
+        .collect().map(_.getString(0)).sorted.toSeq
+    val docs = written("one")
+    assert(docs.size === ids.length && written("inc") === docs)
+
+    // an empty increment: one aggregate, no write, nothing notified, and
+    // neither the destination nor the watermark file is touched
+    def files(root: java.nio.file.Path): Seq[(String, Long, Long)] = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => (f.toString, java.nio.file.Files.size(f),
+          java.nio.file.Files.getLastModifiedTime(f).toMillis)).toSeq.sorted
+      finally walk.close()
+    }
+    val before = files(tmp)
+    val (empty, _, execs) = counted(Extract.run(spark, incCfg, full))
+    assert(empty.rows === 0L && empty.batches === 0L && empty.watermark === steps.last.watermark)
+    assert(execs.size === 1, s"expected the aggregate alone, saw $execs")
+    assert(incSent === oneSent)
+    assert(files(tmp) === before)
+  }
+
+  test("watermark writes are atomic: a concurrent reader always parses") {
+    val p = java.nio.file.Files.createTempDirectory("graft_etl_wm").resolve("last.json")
+    def wm(i: Int) = Watermark(Seq(i.toLong, i * 7919L),
+      if (i % 2 == 0) Some(new java.sql.Timestamp(i * 86400000L)) else None, i * 1000003L)
+    Extract.writeWatermark(p, wm(0))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicLong(0)
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        try Extract.readWatermark(p).getOrElse(failures.add("missing"))
+        catch { case e: Exception => failures.add(e.toString) }
+        reads.incrementAndGet()
+      })
+    reader.start()
+    try for (i <- 1 to 2000) Extract.writeWatermark(p, wm(i))
+    finally { done.set(true); reader.join() }
+    val failed = failures.size
+    assert(reads.get() > 0)
+    assert(failed === 0, s"of ${reads.get()} reads, e.g. ${failures.peek()}")
+    assert(Extract.readWatermark(p) === Some(wm(2000)))
+    // no temp file is left beside the watermark
+    val left = java.nio.file.Files.list(p.getParent)
+    try assert(left.count() === 1L) finally left.close()
   }
 
   test("scaled batch indexing: byte-identical keys + doc→batch mapping vs the window path") {
