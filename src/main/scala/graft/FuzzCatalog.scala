@@ -374,7 +374,7 @@ object FuzzCatalog {
   // domains, densify-zero rows for phantom partitions, the null bucket
   // (edge values outside the domain OR null) under allowNulls, and
   // zero-fill counts with null-kept aggregates. 14 generated 1-edge
-  // queries run through resolveEdge/runEdges, each stamped with a
+  // queries run through resolveEdge/densify, each stamped with a
   // case id and unioned into ONE entry; the oracle mirrors each case
   // as dom VALUES + LEFT JOIN agg + a src-recomputed null-bucket row.
 

@@ -66,23 +66,15 @@ object Formats {
       "data" -> JArray(rows)))
   }
 
-  /** Cube envelope over an edges result (rows already dense + ordered by
-    * edge indices, null partition last — the runEdges contract).
-    * `domains` are the RESOLVED edge partition values from
+  /** Cube envelope over an edges result (rows dense and in edge-index
+    * order, null partition last: the grid [[QueryRunner]] densifies on
+    * the driver). `domains` are the RESOLVED edge partition values from
     * [[QueryRunner.runEdgesWithDomains]] — never reconstructed from result
     * rows, where duplicate partition values or a truncating limit would
     * silently mis-shape the nested data arrays. */
   def cube(df: DataFrame, edgeNames: Seq[String], domains: Seq[Seq[Any]]): String = {
-    // same driver-residency bound as list/table (VERDICT r9 #6): the
-    // dense cube's size is knowable from the RESOLVED domains alone, so
-    // reject an oversized envelope BEFORE the collect, not after
+    requireCubeBound(domains)
     val dims = domains.map(_.size)
-    // Long product: two 100k-partition domains overflow Int to negative
-    // and would PASS an Int check
-    require(dims.map(_.toLong).product <= MaxEnvelopeRows,
-      s"cube envelope is ${dims.mkString("x")} = ${dims.map(_.toLong).product} cells, " +
-        s"over the $MaxEnvelopeRows-row format bound — coarsen a domain " +
-        "(edges partitions/top-k) or use format:container")
     val rows = df.collect().toSeq
     val measureNames = df.columns.filterNot(edgeNames.contains).toSeq
     require(rows.size == dims.product,
@@ -110,6 +102,18 @@ object Formats {
     JsonMethods.compact(JObject("edges" -> edges, "data" -> data))
   }
 
+  /** Same driver-residency bound as list/table (VERDICT r9 #6): the dense
+    * cube's size is knowable from the RESOLVED domains alone. */
+  private def requireCubeBound(domains: Seq[Seq[Any]]): Unit = {
+    val dims = domains.map(_.size)
+    // Long product: two 100k-partition domains overflow Int to negative
+    // and would PASS an Int check
+    require(dims.map(_.toLong).product <= MaxEnvelopeRows,
+      s"cube envelope is ${dims.mkString("x")} = ${dims.map(_.toLong).product} cells, " +
+        s"over the $MaxEnvelopeRows-row format bound — coarsen a domain " +
+        "(edges partitions/top-k) or use format:container")
+  }
+
   /** Run a query and wrap per its `format` (default "list";
     * "cube" requires edges). */
   def run(spark: org.apache.spark.sql.SparkSession, q: JxQuery,
@@ -119,8 +123,10 @@ object Formats {
         require(q.edges.nonEmpty, "cube format requires edges")
         require(q.having.isEmpty,
           "cube format cannot carry `having`: dropping cells breaks the dense N-d shape — use format:\"list\"")
-        val (df, domains) = QueryRunner.runEdgesWithDomains(spark, q, load)
-        cube(df, q.edges.map(_.name), domains)
+        // bound the cube on its domains before the aggregate runs
+        val (domains, densified) = QueryRunner.resolveEdges(spark, q, load)
+        requireCubeBound(domains)
+        cube(densified(), q.edges.map(_.name), domains)
       case "table" => table(QueryRunner.run(spark, q, load))
       case _       => list(QueryRunner.run(spark, q, load))
     }

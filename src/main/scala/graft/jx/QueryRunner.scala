@@ -1,6 +1,7 @@
 package graft.jx
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,10 +16,13 @@ import org.apache.spark.sql.types._
  * Scale notes (designed for a 1000-executor cluster, tested on local[32]):
  *  - edges do NOT use non-equi domain joins: partition membership for
  *    time/duration/range domains is computed arithmetically per row
- *    (`floor((v-min)/interval)`), so the cube is ONE shuffle on small
- *    integer keys; densification is a broadcast join against the tiny
- *    generated domain DataFrame (reference does a UNION-with-missed-
- *    coordinates pass instead: vendor/jx_sqlite/edges_table.py:461-504).
+ *    (`floor((v-min)/interval)`), so the cube is ONE aggregate with one
+ *    shuffle on small integer keys. Its result (at most Π(parts + null)
+ *    rows) is collected and densified on the driver against the domains,
+ *    which are driver values, into a local relation — as the reference
+ *    builds its dense Matrix client-side (vendor/jx_python/containers/
+ *    cube.py:27-95). So an edges query runs its aggregate when the
+ *    DataFrame is built, and the dense grid is held on the driver.
  *  - set/default domains classify via a CASE chain (codegen'd), never a join.
  *  - a DefaultDomain runs one extra top-k job to discover partitions
  *    (reference: edges_table.py:257-264).
@@ -89,18 +93,19 @@ object QueryRunner {
     (filtered, path, ctx)
   }
 
-  def run(spark: SparkSession, q: JxQuery, load: String => DataFrame): DataFrame = {
-    val (filtered, path, ctx) = prologue(q, load)
-    if (q.edges.nonEmpty) runEdges(spark, q, filtered, ctx)
-    else if (q.groupby.nonEmpty) runGroupby(q, filtered, ctx)
-    else if (q.isAggregate) applyHaving(q, runScalarAgg(q, filtered, ctx))
+  def run(spark: SparkSession, q: JxQuery, load: String => DataFrame): DataFrame =
+    if (q.edges.nonEmpty) runEdgesWithDomains(spark, q, load)._1
     else {
-      if (q.having.isDefined)
-        throw new IllegalArgumentException("`having` requires an aggregation (edges/groupby/aggregate select)")
-      val (df2, path2) = implicitDescent(q, filtered, path)
-      runSetop(q, df2, path2, mkCtx(df2, path2))
+      val (filtered, path, ctx) = prologue(q, load)
+      if (q.groupby.nonEmpty) runGroupby(q, filtered, ctx)
+      else if (q.isAggregate) applyHaving(q, runScalarAgg(q, filtered, ctx))
+      else {
+        if (q.having.isDefined)
+          throw new IllegalArgumentException("`having` requires an aggregation (edges/groupby/aggregate select)")
+        val (df2, path2) = implicitDescent(q, filtered, path)
+        runSetop(q, df2, path2, mkCtx(df2, path2))
+      }
     }
-  }
 
   /** Reference list-select descends ONE nested-array branch implicitly:
     * a select path that crosses an array-of-struct column explodes that
@@ -367,24 +372,21 @@ object QueryRunner {
   // ---- edges: dense cube ---------------------------------------------------
 
   /** One resolved edge: how to classify a fact row into a partition index,
-    * plus the small domain DataFrame (idx, value) used to densify. */
+    * plus the partition values (index order) as driver values. */
   private case class ResolvedEdge(
       name: String,
       idxCol: Column,          // nullable partition index for a fact row (null → null bucket)
-      parts: Int,              // number of real partitions
+      values: Seq[Any],        // partition values, index order
+      dataType: DataType,      // Spark type of the values: the edge's output column
       allowNulls: Boolean,
-      domainDF: DataFrame,     // columns: __idx (int), __value (edge output)
-      explodes: Boolean = false) // true when idxCol is an array (interval edges)
-
-  /** Tiny (idx, value) domain DataFrame keeping the value's native Spark type. */
-  private def mkDomainDF(spark: SparkSession, values: Seq[Any], dt: DataType): DataFrame = {
-    val rows = values.zipWithIndex.map { case (v, i) =>
-      org.apache.spark.sql.Row(i, v)
-    }
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      StructType(Seq(StructField("__idx", IntegerType, nullable = false), StructField("__value", dt))))
+      explodes: Boolean = false) { // true when idxCol is an array (interval edges)
+    def domain: Seq[Any] = values ++ (if (allowNulls) Seq(null) else Nil)
   }
+
+  /** A DataFrame over driver rows: a LocalRelation, so the optimizer folds
+    * projections, filters and limits over it without a Spark job. */
+  private def localDF(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   private def sparkTypeOf(v: Any): DataType = v match {
     case _: Long => LongType
@@ -394,7 +396,7 @@ object QueryRunner {
     case _ => StringType
   }
 
-  private def resolveEdge(spark: SparkSession, e: EdgeClause, i: Int, df: DataFrame, ctx: JxCompiler.Ctx): ResolvedEdge = {
+  private def resolveEdge(spark: SparkSession, e: EdgeClause, df: DataFrame, ctx: JxCompiler.Ctx): ResolvedEdge = {
     e.domain match {
       case Domain.SetDomain(parts) =>
         val idx =
@@ -413,8 +415,7 @@ object QueryRunner {
           }
         val partValues: Seq[Any] = parts.map(p => p.value.getOrElse(p.name))
         val dt = partValues.collectFirst { case v if v != null => sparkTypeOf(v) }.getOrElse(StringType)
-        val dom = mkDomainDF(spark, partValues, dt)
-        ResolvedEdge(e.name, idx, parts.size, e.allowNulls, dom)
+        ResolvedEdge(e.name, idx, partValues, dt, e.allowNulls)
 
       case Domain.DefaultDomain(limit) =>
         // discover top-k values by frequency (reference edges_table.py:257-264)
@@ -428,8 +429,7 @@ object QueryRunner {
         val idx = topk.zipWithIndex.foldRight(lit(null).cast(IntegerType)) { case ((value, pi), acc) =>
           when(v <=> JxCompiler.litAny(value), lit(pi)).otherwise(acc)
         }
-        val dom = mkDomainDF(spark, topk, vdt)
-        ResolvedEdge(e.name, idx, topk.size, e.allowNulls, dom)
+        ResolvedEdge(e.name, idx, topk, vdt, e.allowNulls)
 
       case Domain.RangeDomain(mn, mx, step) =>
         val n = math.ceil((mx - mn) / step).toInt
@@ -466,12 +466,20 @@ object QueryRunner {
           val ord = (year(v) * lit(12) + month(v) - lit(1) - lit(ordMin)) / lit(stepMonths)
           val idx = when(v.isNull || v < lit(tmin) || v >= lit(tmax), lit(null).cast(IntegerType))
             .otherwise(floor(ord).cast(IntegerType))
-          val dom = spark.range(n).select(
-            col("id").cast(IntegerType).as("__idx"),
-            to_timestamp(add_months(lit(tmin).cast(DateType), col("id").cast(IntegerType) * stepMonths)).as("__value"))
-          ResolvedEdge(e.name, idx, n, e.allowNulls, dom)
+          val (values, dt) = intervalValues(spark, n,
+            id => to_timestamp(add_months(lit(tmin).cast(DateType), id.cast(IntegerType) * stepMonths)))
+          ResolvedEdge(e.name, idx, values, dt, e.allowNulls)
         }
     }
+  }
+
+  /** An interval domain's partition values: `valueOf` over the ids
+    * 0 until n, evaluated by Spark's own arithmetic (and session zone) on
+    * a local relation, which the optimizer folds on the driver. */
+  private def intervalValues(spark: SparkSession, n: Int, valueOf: Column => Column): (Seq[Any], DataType) = {
+    val ids = localDF(spark, (0 until n).map(i => Row(i.toLong)), StructType(Seq(StructField("id", LongType))))
+    val vals = ids.select(valueOf(col("id")))
+    (vals.collect().map(_.get(0)).toSeq, vals.schema.head.dataType)
   }
 
   /** Interval edge via arithmetic bucketing: idx = floor((v-min)/step).
@@ -487,9 +495,7 @@ object QueryRunner {
       // relies on); on numerics it is a plain widening cast
       JxCompiler.compile(expr, ctx).cast(DoubleType)
     }
-    val dom = spark.range(n).select(
-      col("id").cast(IntegerType).as("__idx"),
-      valueOf(col("id")).as("__value"))
+    val (values, dt) = intervalValues(spark, n, valueOf)
     e.range match {
       case Some((minE, maxE)) =>
         val lo = numeric(minE); val hi = numeric(maxE)
@@ -503,35 +509,42 @@ object QueryRunner {
             lo.isNull || hi.isNull || hi <= lit(mn) || lo >= lit(mx) || hiIdx < loIdx,
             array(lit(null).cast(IntegerType)))
           .otherwise(sequence(loIdx, hiIdx))
-        ResolvedEdge(e.name, arr, n, e.allowNulls, dom, explodes = true)
+        ResolvedEdge(e.name, arr, values, dt, e.allowNulls, explodes = true)
       case None =>
         val v = numeric(e.value.get)
         val idx = when(v.isNull || v < lit(mn) || v >= lit(mx), lit(null).cast(IntegerType))
           .otherwise(floor((v - lit(mn)) / lit(step)).cast(IntegerType))
-        ResolvedEdge(e.name, idx, n, e.allowNulls, dom)
+        ResolvedEdge(e.name, idx, values, dt, e.allowNulls)
     }
   }
 
   /** Edges result + each edge's resolved partition values in domain order
     * (null bucket appended when allowNulls) — the authoritative domains
     * for cube shaping; reconstruction from result rows is ambiguous when
-    * partitions share values or a limit truncates the cube. */
+    * partitions share values or a limit truncates the cube. The domains
+    * are driver values: the Spark work is the aggregate (and a
+    * DefaultDomain's top-k). */
   def runEdgesWithDomains(spark: SparkSession, q: JxQuery, load: String => DataFrame): (DataFrame, Seq[Seq[Any]]) = {
-    val (filtered, _, ctx) = prologue(q, load)
-    val edges = q.edges.zipWithIndex.map { case (e, i) => resolveEdge(spark, e, i, filtered, ctx) }
-    val doms = edges.map { e =>
-      e.domainDF.orderBy(col("__idx")).collect().map(_.get(1)).toSeq ++
-        (if (e.allowNulls) Seq(null) else Nil)
-    }
-    (runEdgesResolved(spark, q, filtered, ctx, edges), doms)
+    val (domains, densified) = resolveEdges(spark, q, load)
+    (densified(), domains)
   }
 
-  private def runEdges(spark: SparkSession, q: JxQuery, df0: DataFrame, ctx: JxCompiler.Ctx): DataFrame =
-    runEdgesResolved(spark, q, df0, ctx,
-      q.edges.zipWithIndex.map { case (e, i) => resolveEdge(spark, e, i, df0, ctx) })
+  /** The edges' domains, and the aggregate-and-densify step still to run,
+    * so a caller can bound the cube on the domains before any aggregate. */
+  private[jx] def resolveEdges(spark: SparkSession, q: JxQuery, load: String => DataFrame)
+      : (Seq[Seq[Any]], () => DataFrame) = {
+    val (filtered, _, ctx) = prologue(q, load)
+    val edges = q.edges.map(resolveEdge(spark, _, filtered, ctx))
+    (edges.map(_.domain), () => densify(spark, q, filtered, ctx, edges))
+  }
 
-  private def runEdgesResolved(spark: SparkSession, q: JxQuery, df0: DataFrame,
-                               ctx: JxCompiler.Ctx, edges: Seq[ResolvedEdge]): DataFrame = {
+  /** ONE grouped aggregate on the partition indices, collected (at most
+    * Π(parts + null) rows) and densified on the driver: every cell in
+    * index order, null bucket last (reference edges_table.py:499-504), an
+    * empty cell's measures null before `default`. The grid is a local
+    * relation, so default/having/limit over it run on the driver. */
+  private def densify(spark: SparkSession, q: JxQuery, df0: DataFrame,
+                      ctx: JxCompiler.Ctx, edges: Seq[ResolvedEdge]): DataFrame = {
     val idxNames = edges.indices.map(i => s"__e${i}_idx")
 
     // classify each fact row; interval (range) edges explode to every matching cell
@@ -541,33 +554,29 @@ object QueryRunner {
     }
     val aggs = q.select.map(aggColumn(_, ctx))
     val grouped = df.groupBy(idxNames.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val cells = grouped.collect().map(r => r.toSeq.take(edges.size) -> r.toSeq.drop(edges.size)).toMap
 
-    // densify: cross-join the (tiny) domains incl. the null bucket, broadcast-join facts
-    val domains = edges.zip(idxNames).map { case (e, nm) =>
-      val base = e.domainDF.select(col("__idx").as(nm), col("__value").as(s"${nm}_v"))
-      if (e.allowNulls)
-        base.unionByName(spark.range(1).select(
-          lit(null).cast(IntegerType).as(nm),
-          lit(null).cast(base.schema(s"${nm}_v").dataType).as(s"${nm}_v")))
-      else base
-    }
-    val dense = domains.reduce(_.crossJoin(_))
-    val joinCond = idxNames.map(nm => dense(nm) <=> grouped(nm)).reduce(_ && _)
-    var out = dense.join(broadcast(grouped), joinCond, "left")
-      .select(
-        edges.zip(idxNames).map { case (e, nm) => dense(s"${nm}_v").as(e.name) } ++
-        idxNames.map(nm => dense(nm).as(s"${nm}_ord")) ++
-        q.select.map(s => s.default match {
-          case Some(d) => coalesce(grouped(s.name), JxCompiler.compile(d, JxCompiler.defaultCtx)).as(s.name)
-          case None    => grouped(s.name)
-        }): _*)
-    // having filters cells BEFORE sort/limit (same order as the groupby
-    // path) — applying it after an explicit limit could drop qualifying
-    // cells that fell outside the pre-filter limit
+    // row-major over the edges' (index, value) axes; an index outside the
+    // domain (or a null without allowNulls) names no cell and drops
+    val axes = edges.map(e => e.values.indices.map(i => (i: Any, e.values(i))) ++
+      (if (e.allowNulls) Seq((null, null)) else Nil))
+    val grid = axes.foldLeft(Seq(Seq.empty[(Any, Any)]))((acc, axis) => for (c <- acc; x <- axis) yield c :+ x)
+    val empty = Seq.fill(q.select.size)(null)
+    val rows = grid.map(c => Row.fromSeq(c.map(_._2) ++ cells.getOrElse(c.map(_._1), empty)))
+    // positional names: edge and measure names may hold dots
+    val schema = StructType(
+      edges.zipWithIndex.map { case (e, i) => StructField(s"__e${i}_v", e.dataType) } ++
+        grouped.schema.fields.drop(edges.size).zipWithIndex.map { case (f, j) => StructField(s"__m$j", f.dataType) })
+    var out = localDF(spark, rows, schema).select(
+      edges.zipWithIndex.map { case (e, i) => col(s"__e${i}_v").as(e.name) } ++
+        q.select.zipWithIndex.map { case (s, j) => s.default match {
+          case Some(d) => coalesce(col(s"__m$j"), JxCompiler.compile(d, JxCompiler.defaultCtx)).as(s.name)
+          case None    => col(s"__m$j").as(s.name)
+        }}: _*)
+    // having filters cells BEFORE limit (same order as the groupby path)
+    // — applying it after an explicit limit could drop qualifying cells
+    // that fell outside the pre-filter limit
     out = q.having.fold(out)(h => out.filter(JxCompiler.filterPred(h, outputCtx)))
-    // order by edge indices, null bucket last (reference edges_table.py:499-504)
-    out = out.orderBy(idxNames.map(nm => col(s"${nm}_ord").asc_nulls_last): _*)
-      .drop(idxNames.map(nm => s"${nm}_ord"): _*)
     q.limit.fold(out)(nLim => out.limit(nLim.toInt))
   }
 

@@ -15,42 +15,10 @@ class EtlSpec extends AnyFunSuite {
     new DurationCounter(Instant.parse("2024-01-01T00:00:00Z"), DurationUnit.Week,
       new BatchCounter(0, 3, new RowCounter(0)))
 
-  private val Sentinel = "__etl_spec_sentinel"
-
-  /** Runs `f` and returns its result with the number of Spark jobs and
-    * the names of the SQL executions it started. Both listeners sit on
-    * Spark's shared listener queue, which delivers events in order: once
-    * a job-free sentinel query's execution is seen, every event of `f`
-    * has been delivered. */
+  /** Runs `f`; its result, Spark jobs and SQL execution names. */
   private def counted[T](f: => T): (T, Int, Seq[String]) = {
-    import org.apache.spark.sql.execution.QueryExecution
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    val execListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == Sentinel)) drained.countDown()
-        else execs.add(funcName)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        execs.add(funcName)
-    }
-    spark.sparkContext.addSparkListener(jobListener)
-    spark.listenerManager.register(execListener)
-    try {
-      val r = f
-      // a local relation collects on the driver: an execution, no job
-      import spark.implicits._
-      Seq(1).toDF(Sentinel).collect()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener events did not drain")
-      (r, jobs.get(), execs.toArray.toSeq.map(_.toString))
-    } finally {
-      spark.listenerManager.unregister(execListener)
-      spark.sparkContext.removeSparkListener(jobListener)
-    }
+    val (r, jobs, execs) = SparkCounts(spark)(f)
+    (r, jobs, execs.map(_._1))
   }
 
   private val keys: Seq[Seq[Any]] = {

@@ -140,4 +140,21 @@ class FormatsSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("format bound"), ex.getMessage)
   }
+
+  test("an oversized cube fails on its domains, before any Spark job") {
+    // set domains are driver values: Formats.run bounds the 200 x 200
+    // grid before the aggregate runs and before any grid is built
+    val parts = (0 until 200).map(i => s"\"p$i\"").mkString(", ")
+    val (ex, jobs, _) = SparkCounts(spark)(intercept[IllegalArgumentException] {
+      Formats.run(spark, JxQuery.parse(s"""{
+        "from": "orders",
+        "edges": [
+          {"name": "a", "value": "o_orderstatus", "allowNulls": false, "domain": {"type": "set", "partitions": [$parts]}},
+          {"name": "b", "value": "o_orderpriority", "allowNulls": false, "domain": {"type": "set", "partitions": [$parts]}}],
+        "select": [{"name": "n", "value": ".", "aggregate": "count"}],
+        "format": "cube"}"""), load)
+    })
+    assert(ex.getMessage.contains("format bound"), ex.getMessage)
+    assert(jobs === 0)
+  }
 }

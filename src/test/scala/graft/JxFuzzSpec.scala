@@ -37,9 +37,9 @@ class JxFuzzSpec extends AnyFunSuite {
     linesOf(df.columns.toSeq, df.collect())
 
   /** The 2-edge engine output, collected ONCE per block (review r11):
-    * the shape law and the Spark-SQL twin both consume it, and the
-    * 10-way union of cross-join-densify plans is the most expensive
-    * compile mass in this suite. */
+    * the shape law and the Spark-SQL twin both consume it. Each of the
+    * 10 cases runs its own aggregate job while the block is built; the
+    * block is then a union of 10 driver-densified local grids. */
   private lazy val edge2Results: Map[String, (Seq[String], Array[org.apache.spark.sql.Row])] =
     FuzzCatalog.edge2Blocks.map { case (name, _, _) =>
       val df = FuzzCatalog.queries(name)(spark, dir)

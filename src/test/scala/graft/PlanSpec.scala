@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
+import graft.jx.{Formats, JxQuery}
 
 /** Physical-plan regression tests for the properties that matter at
   * 100 TB: filters reach the parquet scan (PushedFilters), projection
@@ -8,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * columns, and expression pipelines stay inside whole-stage codegen.
   * Catching a regression here costs milliseconds; catching it in a
   * cluster bill does not. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = GraftSession.get("4")
   val dir = "/root/testdata/sf0.001"
 
@@ -51,10 +56,27 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("*("), "no whole-stage-codegen spans in q_expr_math plan")
   }
 
-  test("edges densify via broadcast, not a shuffle join") {
-    val p = plan("q_edges_set")
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
-      "domain densify join is not broadcast")
+  test("edges run as one aggregate: one execution, one shuffle, no join") {
+    // the domains are driver values and the grouped cells are densified on
+    // the driver, so the only execution over the facts is the aggregate;
+    // reading the dense grid back is a job-free local scan
+    def aggregateOnly(what: String, execs: Seq[(String, QueryExecution)]): Unit = {
+      val plans = execs.map(_._2.executedPlan).filterNot(_.isInstanceOf[LocalTableScanExec])
+      assert(plans.size === 1, s"$what: ${plans.size} executions beyond local scans:\n${plans.mkString("\n")}")
+      val shuffles = collect(plans.head) { case e: ShuffleExchangeExec => e }
+      val joins = collect(plans.head) { case j: BaseJoinExec => j }
+      assert(shuffles.size === 1 && joins.isEmpty, s"$what:\n${plans.head}")
+    }
+    val (_, _, execs) = SparkCounts(spark)(SparkEntry.queries("q_edges_set")(spark, dir).collect())
+    aggregateOnly("q_edges_set", execs)
+    val (_, _, cubeExecs) = SparkCounts(spark)(Formats.run(spark, JxQuery.parse("""{
+      "from": "lineitem",
+      "edges": [
+        {"name": "flag", "value": "l_returnflag", "domain": {"type": "set", "partitions": ["A", "N", "R"]}},
+        {"name": "qty", "value": "l_quantity", "domain": {"type": "range", "min": 1, "max": 51, "interval": 10}}],
+      "select": [{"name": "n", "value": ".", "aggregate": "count"}],
+      "format": "cube"}"""), SparkEntry.loader(spark, dir)))
+    aggregateOnly("cube", cubeExecs)
   }
 
   test("ivfpq: cell join broadcasts the probe side; corpus side has no pre-join Exchange") {
